@@ -1,68 +1,76 @@
-"""Typed parse layer over raw (path, offset, record) log DataFrames.
+r"""Typed parse layer over raw (path, offset, record) log DataFrames.
 
 Spark-native re-statement of the reference's downstream parse step
 (Test.java:119-121, 211-215 map function; LogfileType.java:47-51 DOTALL
 regex with named groups).  Where the reference dispatches on a
 driver-side ``HashMap<path, LogfileType>`` closed over by a lambda, we
-stay entirely in Catalyst: both record layouts are attempted with
-``regexp_extract`` and coalesced, so the whole parse is JVM-side,
+stay entirely in Catalyst: each record is split once on the field
+separator and the layout is told apart by which of the first two
+fields is the timestamp, so the whole parse is JVM-side,
 codegen-friendly, and needs no per-path configuration at all.
 
 Layouts (LogfileType.java:21-23 parity):
 
 - A: ``<timestamp> | <level> | <logger> | <message...>``
 - B: ``<level> | <timestamp> | <logger> | <message...>``
+
+The split gives exactly the groups of the reference's regex
+``^(TS)\s\|\s(LV)\s\|\s(.*?)\s\|\s(.*)$`` under DOTALL: neither a
+timestamp nor a level contains ``|``, so the first two separators sit
+right after them; the lazy logger group ends at the next separator,
+which is where the split's third cut falls; and the greedy message
+group is the unsplit remainder, continuation lines included.  The
+timestamp check is anchored with ``\z``, not ``$``: Java's ``$`` also
+matches before a final line terminator, which would accept a field of
+``<TS>\n`` that the reference regex rejects.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _TS = r"[0-9]{4}-[0-9]{2}-[0-9]{2}\s[0-2][0-9]:[0-5][0-9]:[0-5][0-9],[0-9]{3}"
-_LV = r"INFO|WARN|ERROR"
-#: (?s) = Pattern.DOTALL parity (LogfileType.java:32): the lazy logger
-#: group and greedy message group span continuation lines.
-_LAYOUT_A = rf"(?s)^({_TS})\s\|\s({_LV})\s\|\s(.*?)\s\|\s(.*)$"
-_LAYOUT_B = rf"(?s)^({_LV})\s\|\s({_TS})\s\|\s(.*?)\s\|\s(.*)$"
+_TS_FIELD = rf"^{_TS}\z"
+_LEVELS = ("INFO", "WARN", "ERROR")
+_SEP = r"\s\|\s"
 
 #: yyyy-MM-dd HH:mm:ss,SSS (LogfileType.java:28)
 TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss,SSS"
 
 
-def _first_nonempty(*cols: Column) -> Column:
-    out = None
-    for c in cols:
-        c = F.nullif(c, F.lit(""))
-        out = c if out is None else F.coalesce(out, c)
-    return out
-
-
 def parse_log_records(df: DataFrame, record_col: str = "record") -> DataFrame:
     """Add ``ts TIMESTAMP, level STRING, logger STRING, message STRING``
-    parsed from either record layout (null on no match).
+    parsed from either record layout (null on no match; an empty
+    logger or message is null too).
 
-    Pure column expressions — at 100 TB this stays inside whole-stage
-    codegen; never a Python UDF (SURVEY.md §2.8 U1 mapping).
+    One ``split`` per record and one projection — pure column
+    expressions, so at 100 TB this stays inside whole-stage codegen;
+    never a Python UDF (SURVEY.md §2.8 U1 mapping).
     """
-    r = F.col(record_col)
-    ts_str = _first_nonempty(
-        F.regexp_extract(r, _LAYOUT_A, 1), F.regexp_extract(r, _LAYOUT_B, 2)
-    )
-    level = _first_nonempty(
-        F.regexp_extract(r, _LAYOUT_A, 2), F.regexp_extract(r, _LAYOUT_B, 1)
-    )
-    logger = _first_nonempty(
-        F.regexp_extract(r, _LAYOUT_A, 3), F.regexp_extract(r, _LAYOUT_B, 3)
-    )
-    message = _first_nonempty(
-        F.regexp_extract(r, _LAYOUT_A, 4), F.regexp_extract(r, _LAYOUT_B, 4)
-    )
-    return (
-        df.withColumn("ts", F.to_timestamp(ts_str, TIMESTAMP_FORMAT))
-        .withColumn("level", level)
-        .withColumn("logger", logger)
-        .withColumn("message", message)
+    f = F.split(F.col(record_col), _SEP, 4)
+    # ``get``, unlike ``[]``, is null past the end under ANSI too
+    f0, f1 = F.get(f, 0), F.get(f, 1)
+    four = F.size(f) == 4
+    is_a = four & f0.rlike(_TS_FIELD) & f1.isin(*_LEVELS)
+    is_b = four & f1.rlike(_TS_FIELD) & f0.isin(*_LEVELS)
+
+    def tail(i: int):
+        # empty -> null by a plain condition: Spark rewrites
+        # ``nullif``'s shared operand into a second projection, which
+        # splits the record a second time
+        v = F.get(f, i)
+        return F.when((is_a | is_b) & (v != ""), v)
+
+    return df.withColumns(
+        {
+            "ts": F.to_timestamp(
+                F.when(is_a, f0).when(is_b, f1), TIMESTAMP_FORMAT
+            ),
+            "level": F.when(is_a, f1).when(is_b, f0),
+            "logger": tail(2),
+            "message": tail(3),
+        }
     )
 
 

@@ -89,13 +89,6 @@ def _shingle_sets(docs: DataFrame, min_words: int = SHINGLE_WORDS) -> DataFrame:
     )
 
 
-def _shingled(docs: DataFrame, min_words: int = SHINGLE_WORDS) -> DataFrame:
-    """(doc_id, shingle) rows: exploded form of :func:`_shingle_sets`."""
-    return _shingle_sets(docs, min_words).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-
-
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate grouping by full-content SHA-256.
 
@@ -158,23 +151,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig array<bigint>): 32-permutation MinHash signature.
-
-    One 64-bit ``xxhash64`` per shingle, then 32 affine universal-hash
-    permutations over the 60-bit base; all 32 mins compute in ONE
-    aggregation pass (map-side partial min).
-    """
-    return _signatures_from_sets(
-        _shingle_sets(load(spark, sf_dir, "documents"))
-    )
-
-
 def _signatures_from_sets(
     sets: DataFrame, hash_fn: str = "xxhash64"
 ) -> DataFrame:
-    """MinHash signatures from a (doc_id, shingles) DataFrame — the
-    single definition both the public API and the LSH path use.
+    """(doc_id, sig array<bigint>): 32-permutation MinHash signatures
+    from a (doc_id, shingles) DataFrame — the single definition every
+    LSH path (batch, incremental, streaming) uses.  All 32 mins compute
+    in ONE aggregation pass (map-side partial min).
 
     ``hash_fn`` picks the 60-bit BASE hash only — both families then
     run the same 32 affine universal-hash permutations

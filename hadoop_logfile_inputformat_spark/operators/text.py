@@ -9,6 +9,8 @@ right shape for a 100 TB corpus pass.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1070,7 +1072,7 @@ def bpe_merges(
             spark, os.path.join(sf_dir, "documents.parquet")
         )
         vocab_parts = max(1, min(target, corpus_bytes // (64 << 20)))
-    except Exception:
+    except OSError:
         vocab_parts = target  # unlistable path: keep the wide default
     cur = scoped_persist(cur.repartition(vocab_parts), "bpe_vocab")
     merges = []

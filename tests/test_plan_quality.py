@@ -84,6 +84,24 @@ def test_no_row_at_a_time_python_in_hot_paths(spark, name):
     assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
 
 
+def test_log_parse_is_one_split_projection(spark):
+    """``parse_log_records`` splits each record once in a JVM
+    projection: no per-layout ``regexp_extract`` (the two-regex form
+    cost 4 full-record DOTALL matches per record even after pruning)
+    and no Python evaluation of any kind."""
+    from hadoop_logfile_inputformat_spark.functions.logparse import parse_log_records
+    from hadoop_logfile_inputformat_spark.operators.logparity import _read_fixture
+
+    df = parse_log_records(_read_fixture(spark, "log")).groupBy("level", "logger").count()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "split(record" in plan, plan
+    for banned in ("regexp_extract", "BatchEvalPython", "ArrowEvalPython"):
+        assert banned not in plan, f"log parse plan contains {banned}"
+
+
 @pytest.mark.parametrize(
     "name",
     [
