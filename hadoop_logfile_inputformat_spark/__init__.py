@@ -17,7 +17,14 @@ PySpark Python DataSource (``sources.logfile``) producing a DataFrame
 
 __version__ = "0.1.0"
 
-from hadoop_logfile_inputformat_spark.sources.logfile import (  # noqa: F401
-    LogfileDataSource,
-    register_logfile_source,
-)
+_LAZY = ("LogfileDataSource", "register_logfile_source")
+
+
+def __getattr__(name):
+    # PEP 562: importing the package imports no pyspark, so the worker
+    # daemon (``_daemon``) can fix ``sys.path`` before pyspark loads.
+    if name in _LAZY:
+        from hadoop_logfile_inputformat_spark.sources import logfile
+
+        return getattr(logfile, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -6,6 +6,7 @@ bench, __spark_entry__) runs the same configuration:
 - AQE on (runtime coalescing, skew-join splitting)
 - broadcast threshold raised: all dims in this star schema are tiny
 - Arrow enabled for every Python<->JVM hop (data source, pandas UDFs)
+- local masters fork Python workers from ``_daemon`` (no per-task zip re-reads)
 """
 
 from __future__ import annotations
@@ -33,9 +34,10 @@ def get_spark(
         )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -51,6 +53,12 @@ def get_spark(
         # maps to executor memory, sized per-node instead.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    if master == "local" or master.startswith("local["):
+        # the package root is on the workers' PYTHONPATH (above) before
+        # the daemon starts; on a cluster it may arrive only per task
+        builder = builder.config(
+            "spark.python.daemon.module", "hadoop_logfile_inputformat_spark._daemon"
+        )
     spark = builder.getOrCreate()
     from hadoop_logfile_inputformat_spark.sources.logfile import register_logfile_source
 

@@ -37,8 +37,8 @@ Two readers, one offset model:
 
 from __future__ import annotations
 
+import logging
 import re
-import sys
 from dataclasses import dataclass
 from typing import Iterator, List, Tuple
 
@@ -63,6 +63,8 @@ from hadoop_logfile_inputformat_spark.sources.logfile import (
     iter_records,
     scan_partition_arrow,
 )
+
+_LOG = logging.getLogger(__name__)
 
 #: Suffixes excluded from the watched file set.  The streaming offset
 #: model indexes RAW file bytes (raw sizes, raw opens); a
@@ -333,10 +335,10 @@ class LogfileStreamReader(DataSourceStreamReader):
         except FileNotFoundError as exc:
             if not self.ignore_missing:
                 raise
-            print(
-                f"logfile-stream: ignoring file rotated away mid-batch "
-                f"{partition.path!r}: {exc}",
-                file=sys.stderr,
+            _LOG.warning(
+                "logfile-stream: ignoring file rotated away mid-batch %r: %s",
+                partition.path,
+                exc,
             )
 
     def commit(self, end: dict) -> None:

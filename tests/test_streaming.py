@@ -1,6 +1,7 @@
 """Streaming tests: incremental logfile tailing with multi-line holdback,
 plus watermarked window pipelines over a deterministic event stream."""
 
+import logging
 import os
 import time
 
@@ -757,9 +758,10 @@ def test_curate_stream_gates_and_dedups_across_batches(spark, tmp_path):
     assert spark.table("t_curate_idx_hashes").count() == n_hashes
 
 
-def test_stream_reader_ignore_missing_files(tmp_path):
+def test_stream_reader_ignore_missing_files(tmp_path, caplog):
     """A partition whose file rotated away between planning and read
-    yields nothing under ignoreMissingFiles=true and raises without it
+    yields nothing under ignoreMissingFiles=true, with a WARNING through
+    the module logger as the batch reader gives, and raises without it
     (the wedged-stream escape hatch)."""
     from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
         LogfileStreamPartition,
@@ -774,7 +776,11 @@ def test_stream_reader_ignore_missing_files(tmp_path):
     tolerant = LogfileStreamReader(
         {"path": str(real), "pattern": pat, "ignoremissingfiles": "true"}
     )
-    assert list(tolerant.read(ghost)) == []
+    with caplog.at_level(logging.WARNING):
+        assert list(tolerant.read(ghost)) == []
+    [warned] = caplog.records
+    assert warned.name == "hadoop_logfile_inputformat_spark.streaming.logfile_stream"
+    assert warned.levelno == logging.WARNING and "rotated.log" in warned.getMessage()
 
     strict = LogfileStreamReader({"path": str(real), "pattern": pat})
     import pytest as _pytest
