@@ -21,18 +21,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    # The JVM spawns fresh Python workers for the data source / pandas
-    # UDFs; they don't inherit the driver's sys.path. Export the package
-    # root on PYTHONPATH *before* the JVM starts so `import
-    # hadoop_logfile_inputformat_spark` resolves on every worker. On a
-    # real cluster the equivalent is shipping a wheel via --py-files.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
-        )
-
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     builder = (
@@ -54,12 +42,31 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     if master == "local" or master.startswith("local["):
-        # the package root is on the workers' PYTHONPATH (above) before
+        # the package root is on the workers' PYTHONPATH (below) before
         # the daemon starts; on a cluster it may arrive only per task
         builder = builder.config(
             "spark.python.daemon.module", "hadoop_logfile_inputformat_spark._daemon"
         )
-    spark = builder.getOrCreate()
+    # The JVM spawns fresh Python workers for the data source / pandas
+    # UDFs; they don't inherit the driver's sys.path. Put the package
+    # root on PYTHONPATH for the gateway launch only (PySpark copies
+    # os.environ into the JVM's environment there, and the workers
+    # inherit the JVM's), then restore it, so later subprocesses of this
+    # process do not import the package by accident. On a real cluster
+    # the equivalent is shipping a wheel via --py-files.
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    existing = os.environ.get("PYTHONPATH")
+    if pkg_root not in (existing or "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
+        )
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if existing is None:
+            os.environ.pop("PYTHONPATH", None)
+        else:
+            os.environ["PYTHONPATH"] = existing
     from hadoop_logfile_inputformat_spark.sources.logfile import register_logfile_source
 
     register_logfile_source(spark)

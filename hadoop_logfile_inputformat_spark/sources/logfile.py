@@ -97,7 +97,7 @@ if TYPE_CHECKING:
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 ARROW_BATCH_RECORDS = 4096
 
-#: Scan window for the chunked/vectorized scanners.  512 KB measured
+#: Scan window of the chunked scanner.  512 KB measured
 #: fastest across narrow (63 B) and wide (multi-line stack) records —
 #: ~15% over the previous 4 MB on narrow corpora: the window plus its
 #: per-chunk slices stay L2/L3-resident, and with 32 concurrent scan
@@ -343,8 +343,8 @@ def _strip_line_crs(data: bytes) -> bytes:
     lines 270-273).  A record-wide ``replace(b"\\r\\n", b"\\n")`` is only
     equivalent when no line BODY ends in ``\\r`` — for ``b"a\\r\\r\\n"``
     it collapses to ``a`` where the line scanner keeps ``a\\r``.  This
-    helper is the shared normalization for every chunked/vectorized
-    path; callers gate on ``b"\\r" in data`` to keep LF-only input free.
+    helper is the chunked scanner's normalization; callers gate on
+    ``b"\\r" in data`` to keep LF-only input free.
     """
     return b"\n".join(
         line[:-1] if line.endswith(b"\r") else line
@@ -366,124 +366,13 @@ def _truncate_record_bytes(data: bytes, cap: int) -> bytes:
     return b"\n".join(out)
 
 
-def iter_records_chunked(
-    fobj,
-    *,
-    start: int,
-    end: int,
-    pattern: str,
-    encoding: str = "utf-8",
-    max_record_bytes: int = 0,
-    chunk_bytes: int = CHUNK_BYTES,
-) -> Iterator[Tuple[int, str]]:
-    """Chunked twin of :func:`iter_records` — same contract, ~10x the
-    throughput.
-
-    Instead of a Python loop testing every line, each ~4 MB chunk is
-    scanned with ONE C-level ``re.finditer`` over a MULTILINE bytes
-    regex; records are the byte segments between consecutive first-line
-    match starts.  Property tests assert multiset equality with the
-    line scanner across random corpora and split points.
-
-    Caveat (documented): the pattern is evaluated in bytes mode, so
-    ``\\d``/``\\w``/``\\s`` are ASCII-only — correct for machine log
-    preambles; pass option ``scanner=line`` for Unicode-class patterns.
-    """
-    bpat = re.compile(
-        b"(?m)^(?:" + pattern.encode(encoding) + b")\r?$"
-    )
-    unbounded = end < 0
-    pos = start
-    if start > 0:
-        fobj.seek(start - 1)
-        fobj.readline()  # discard (partial) line; -1 trick
-        pos = fobj.tell()
-
-    base = pos          # absolute offset of scan window start
-    tail = b""          # bytes after the last complete line
-    rec_start = -1      # absolute offset of the open record
-    rec_parts: List[bytes] = []
-    rec_size = 0
-    rec_truncated = False
-
-    def emit():
-        data = b"".join(rec_parts)
-        if max_record_bytes > 0 and rec_size > max_record_bytes:
-            # cap on RAW bytes (split keeps each line's \r, so the
-            # +1-per-line accounting equals the line scanner's len(raw))
-            data = _truncate_record_bytes(data, max_record_bytes)
-        if data.endswith(b"\n"):
-            data = data[:-1]
-        if b"\r" in data:
-            data = _strip_line_crs(data)
-        return rec_start, data.decode(encoding, errors="replace")
-
-    while True:
-        chunk = fobj.read(chunk_bytes)
-        eof = not chunk
-        data = tail + chunk
-        if eof:
-            scan, tail = data, b""
-        else:
-            nl = data.rfind(b"\n")
-            if nl < 0:
-                tail = data
-                continue
-            scan, tail = data[: nl + 1], data[nl + 1:]
-
-        cut = 0  # relative start of bytes not yet attributed
-        has_cr = b"\r" in scan  # one C pass per chunk, not per record
-        for m in bpat.finditer(scan):
-            s = m.start()
-            if rec_start >= 0:
-                if not rec_parts and not (max_record_bytes > 0):
-                    # fast path: record fully inside this scan window
-                    # (the overwhelmingly common case).  The byte before
-                    # a match start is always '\n', so one slice both
-                    # extracts the record and strips its terminator.
-                    data = scan[cut:s - 1]
-                    if has_cr and b"\r" in data:
-                        data = _strip_line_crs(data)
-                    yield rec_start, data.decode(encoding, errors="replace")
-                else:
-                    seg = scan[cut:s]
-                    if not rec_truncated:
-                        rec_parts.append(seg)
-                        rec_size += len(seg)
-                        if (
-                            max_record_bytes > 0
-                            and rec_size > max_record_bytes + chunk_bytes
-                        ):
-                            # eager cap so a pathological record cannot
-                            # exhaust memory before its terminator arrives
-                            rec_parts = [
-                                _truncate_record_bytes(
-                                    b"".join(rec_parts), max_record_bytes
-                                )
-                            ]
-                            rec_truncated = True
-                    yield emit()
-                    rec_parts, rec_size, rec_truncated = [], 0, False
-                rec_start = -1
-            if not unbounded and base + s >= end:
-                return  # owned by the next split
-            rec_start = base + s
-            cut = s
-        if rec_start >= 0:
-            seg = scan[cut:]
-            if not rec_truncated:
-                rec_parts.append(seg)
-                rec_size += len(seg)
-                if max_record_bytes > 0 and rec_size > max_record_bytes + chunk_bytes:
-                    rec_parts = [
-                        _truncate_record_bytes(b"".join(rec_parts), max_record_bytes)
-                    ]
-                    rec_truncated = True
-        base += len(scan)
-        if eof:
-            if rec_start >= 0:
-                yield emit()
-            return
+def _first_line_bytes_regex(pattern: str, encoding: str) -> "re.Pattern[bytes]":
+    """The bytes-mode MULTILINE form of a first-line ``pattern``: one
+    match per line that fully matches it (``Matcher.matches()`` parity,
+    LogfileRecordReader.java:272-274), with an optional ``\\r`` before
+    the terminator.  Shared by the scanner and the stream reader's
+    commit point, so both agree on what a first line is."""
+    return re.compile(b"(?m)^(?:" + pattern.encode(encoding) + b")\r?$")
 
 
 def iter_record_lists_chunked(
@@ -493,24 +382,31 @@ def iter_record_lists_chunked(
     end: int,
     pattern: str,
     encoding: str = "utf-8",
+    max_record_bytes: int = 0,
     chunk_bytes: int = CHUNK_BYTES,
 ) -> Iterator[Tuple[List[int], List[bytes]]]:
-    """Vectorized twin of :func:`iter_records_chunked`: per ~4 MB chunk,
-    ONE ``(offsets, records)`` pair instead of one yield per record.
+    """Chunked twin of :func:`iter_records`: per chunk, ONE
+    ``(offsets, records)`` pair instead of one yield per record.
 
     Same ownership/boundary contract (property-tested against the line
-    scanner), but the per-record work collapses to two list
-    comprehensions over the chunk's match spans — no generator
-    resumption, branch ladder, or decode per record.  Records are
-    returned as BYTES with ``\\r\\n`` normalized and the trailing
+    scanner), but each chunk is scanned with ONE C-level ``finditer``
+    over :func:`_first_line_bytes_regex` and the per-record work
+    collapses to two list comprehensions over the match spans — no
+    generator resumption, branch ladder, or decode per record.  Records
+    are returned as BYTES with ``\\r\\n`` normalized and the trailing
     newline stripped; the caller hands them to Arrow, which validates
     UTF-8 wholesale (~10x cheaper than ``bytes.decode`` per record).
 
-    No ``max_record_bytes`` support — callers needing the truncation
-    guard use :func:`iter_records_chunked` (the source reader picks
-    automatically).
+    ``max_record_bytes`` > 0 applies the line scanner's runaway-record
+    cap (LogfileRecordReader.java:310-314 buffers unboundedly) to each
+    record's RAW bytes; a record still open at a chunk edge is capped
+    eagerly, so one that never terminates stays bounded in memory.
+
+    Caveat (documented): the pattern is evaluated in bytes mode, so
+    ``\\d``/``\\w``/``\\s`` are ASCII-only — correct for machine log
+    preambles; pass option ``scanner=line`` for Unicode-class patterns.
     """
-    bpat = re.compile(b"(?m)^(?:" + pattern.encode(encoding) + b")\r?$")
+    bpat = _first_line_bytes_regex(pattern, encoding)
     unbounded = end < 0
     pos = start
     if start > 0:
@@ -524,6 +420,8 @@ def iter_record_lists_chunked(
     carry_start = -1
 
     def _finalize(data: bytes) -> bytes:
+        if max_record_bytes > 0 and len(data) > max_record_bytes:
+            data = _truncate_record_bytes(data, max_record_bytes)
         if data.endswith(b"\n"):
             data = data[:-1]
         if b"\r" in data:
@@ -562,8 +460,7 @@ def iter_record_lists_chunked(
                 carry, carry_start = [], -1
             # middle records: the byte before a match start is always
             # '\n', so [a:b-1] both slices the record and drops its
-            # terminator (same trick as iter_records_chunked's fast
-            # path)
+            # terminator
             offsets.extend(base + s for s in starts[:n_owned - 1])
             records.extend(
                 scan[a:b - 1]
@@ -584,9 +481,28 @@ def iter_record_lists_chunked(
                 carry, carry_start = [], -1
             else:
                 carry.append(scan)
+                if (
+                    max_record_bytes > 0
+                    and sum(map(len, carry)) > max_record_bytes + chunk_bytes
+                ):
+                    # eager cap, so a record that never terminates stays
+                    # bounded: its kept lines already reach the cap, and
+                    # _finalize drops whatever is appended after them
+                    carry = [
+                        _truncate_record_bytes(b"".join(carry), max_record_bytes)
+                        + b"\n"
+                    ]
         # else: bytes precede this split's first record — previous
         # split's property (findFirstFirstLine parity)
 
+        if max_record_bytes > 0 and len(scan) > max_record_bytes and records:
+            # a middle slice lacks its '\n', so its raw size is len + 1
+            records = [
+                _truncate_record_bytes(rec, max_record_bytes)
+                if len(rec) >= max_record_bytes
+                else rec
+                for rec in records
+            ]
         if b"\r" in scan and records:
             # CR-normalize the RAW middle slices only (head/tail_rec
             # went through _finalize already; normalizing twice would
@@ -678,11 +594,10 @@ def scan_partition_arrow(
     """Scan one byte range of one file; yield Arrow batches of
     ``(path, offset, record)``.
 
-    The shared executor-side core of the batch reader and the
-    partitioned streaming reader.  Bounded memory: only the current
-    record plus one Arrow batch of assembled records is ever buffered
-    (LogfileRecordReader.java:86-91 parity, batched for vectorized
-    Python→JVM transfer).  ``cap`` hard-limits reads to ``[0, cap)``
+    The executor-side core of every logfile read, batch and stream.
+    Bounded memory: only the current record plus one Arrow batch of
+    assembled records is ever buffered (LogfileRecordReader.java:86-91
+    parity, batched for vectorized Python→JVM transfer).  ``cap`` hard-limits reads to ``[0, cap)``
     (see :class:`_CappedReader`).
     """
     import pyarrow as pa
@@ -695,85 +610,64 @@ def scan_partition_arrow(
         [("path", pa.string()), ("offset", pa.int64()), ("record", pa.string())]
     )
 
-    if (
-        scanner == "chunked"
-        and max_record_bytes <= 0
-        and encoding.lower().replace("-", "") == "utf8"
-        # utf-8 ONLY: Arrow's batch validation checks UTF-8, so an
-        # encoding='ascii' batch containing valid multi-byte UTF-8
-        # would pass through verbatim where the scanners' decode
-        # contract emits U+FFFD per non-ASCII byte — ascii goes through
-        # the per-record decode path below instead
-    ):
-        # vectorized fast path (the default configuration): one
-        # (offsets, byte-records) pair per chunk; Arrow validates UTF-8
-        # for the whole batch instead of bytes.decode per record —
-        # measured ~2.4x the per-record generator's scan rate
-        try:
-            for offsets, records in iter_record_lists_chunked(
-                fobj, start=start, end=end, pattern=pattern, encoding=encoding
-            ):
-                try:
-                    rec_arr = pa.array(records, pa.string())
-                except pa.ArrowInvalid:
-                    # invalid UTF-8 somewhere in the batch: match the
-                    # scanners' errors="replace" contract per record
-                    rec_arr = pa.array(
-                        [r.decode(encoding, errors="replace") for r in records],
-                        pa.string(),
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([path] * len(offsets), pa.string()),
-                        pa.array(offsets, pa.int64()),
-                        rec_arr,
-                    ],
-                    schema=arrow_schema,
-                )
-        finally:
-            fobj.close()
-        return
+    def _batch(offsets, rec_arr):
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([path] * len(offsets), pa.string()),
+                pa.array(offsets, pa.int64()),
+                rec_arr,
+            ],
+            schema=arrow_schema,
+        )
 
-    if scanner == "chunked":
-        record_iter = iter_records_chunked(
+    try:
+        if scanner == "line":
+            offsets: List[int] = []
+            records: List[str] = []
+            for offset, record in iter_records(
+                fobj,
+                start=start,
+                end=end,
+                regex=re.compile(pattern),
+                encoding=encoding,
+                max_record_bytes=max_record_bytes,
+            ):
+                offsets.append(offset)
+                records.append(record)
+                if len(offsets) >= ARROW_BATCH_RECORDS:
+                    yield _batch(offsets, pa.array(records, pa.string()))
+                    offsets, records = [], []
+            if offsets:
+                yield _batch(offsets, pa.array(records, pa.string()))
+            return
+
+        # one (offsets, byte-records) pair per chunk; Arrow validates
+        # UTF-8 for the whole batch instead of bytes.decode per record
+        utf8 = encoding.lower().replace("-", "") == "utf8"
+        for offsets, records in iter_record_lists_chunked(
             fobj,
             start=start,
             end=end,
             pattern=pattern,
             encoding=encoding,
             max_record_bytes=max_record_bytes,
-        )
-    else:
-        record_iter = iter_records(
-            fobj,
-            start=start,
-            end=end,
-            regex=re.compile(pattern),
-            encoding=encoding,
-            max_record_bytes=max_record_bytes,
-        )
-
-    def _batch(offsets, records):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([path] * len(offsets), pa.string()),
-                pa.array(offsets, pa.int64()),
-                pa.array(records, pa.string()),
-            ],
-            schema=arrow_schema,
-        )
-
-    offsets: List[int] = []
-    records: List[str] = []
-    try:
-        for offset, record in record_iter:
-            offsets.append(offset)
-            records.append(record)
-            if len(offsets) >= ARROW_BATCH_RECORDS:
-                yield _batch(offsets, records)
-                offsets, records = [], []
-        if offsets:
-            yield _batch(offsets, records)
+        ):
+            rec_arr = None
+            if utf8:
+                try:
+                    rec_arr = pa.array(records, pa.string())
+                except pa.ArrowInvalid:
+                    pass  # invalid UTF-8 somewhere in the batch
+            if rec_arr is None:
+                # the scanners' errors="replace" contract, per record;
+                # every other encoding always decodes here (Arrow would
+                # pass valid multi-byte UTF-8 through an 'ascii' read
+                # verbatim, where the contract is one U+FFFD per byte)
+                rec_arr = pa.array(
+                    [r.decode(encoding, errors="replace") for r in records],
+                    pa.string(),
+                )
+            yield _batch(offsets, rec_arr)
     finally:
         fobj.close()
 
@@ -961,6 +855,16 @@ def plan_partitions(
     return parts
 
 
+def _scanner_option(options) -> str:
+    """The ``scanner`` option of both logfile readers: ``chunked``
+    (default) or ``line`` (Unicode-class patterns).  Anything else is a
+    hard error, not a silent fall-back to the ~10x slower line scanner."""
+    scanner = options.get("scanner", "chunked")
+    if scanner not in ("chunked", "line"):
+        raise ValueError(f"scanner must be 'chunked' or 'line', got {scanner!r}")
+    return scanner
+
+
 class LogfileReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
         self.schema = schema
@@ -971,9 +875,7 @@ class LogfileReader(DataSourceReader):
         )
         self.max_record_bytes = int(options.get("maxrecordbytes", 0))
         self.encoding = options.get("encoding", "utf-8")
-        self.scanner = options.get("scanner", "chunked")
-        if self.scanner not in ("chunked", "line"):
-            raise ValueError(f"scanner must be 'chunked' or 'line', got {self.scanner!r}")
+        self.scanner = _scanner_option(options)
         # Spark-native file-source semantics (spark.sql.files.*), as
         # per-source options: a 100 TB scan must survive one truncated
         # .gz (rows read so far are kept, the rest of the file is

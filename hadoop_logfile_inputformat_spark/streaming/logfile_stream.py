@@ -5,7 +5,7 @@ The streaming port of the batch ``logfile`` source (SURVEY.md §2.7):
 the reference's ``(path, offset)`` record key (LogfileRecordReader.java:304)
 becomes the streaming *offset* — progress markers are
 ``{path: byte_position}`` per tracked file, which makes exactly-once
-replay natural: ``readBetweenOffsets(start, end)`` re-scans exactly
+replay natural: the batch ``(start, end)`` re-scans exactly
 ``[start[path], end[path])`` of each file with the same boundary
 algorithm the batch source uses.
 
@@ -17,50 +17,39 @@ unless the file has stopped growing — the ``tail_stable_batches``
 option controls how many polls a file size must be unchanged before
 the dangling tail is emitted as a final record.
 
-Two readers, one offset model:
-
-- ``LogfileStreamReader`` (default): a partition-parallel
-  ``DataSourceStreamReader``.  The driver's ``latestOffset`` only
-  inspects file tails (a bounded backwards scan for the last first-line
-  start — the largest safely-committable offset); executors then scan
-  each file's ``[start, end)`` backlog in parallel, split into
-  ``maxPartitionBytes`` byte ranges exactly like the batch source, so a
-  firehose catch-up of a 10 GB file fans out across the cluster.
-  Reads are hard-capped at the batch-end offset (``_CappedReader``), so
-  a replayed batch sees exactly the bytes that existed at planning time
-  even if the file has grown — deterministic exactly-once replay.
-- ``LogfileSimpleStreamReader`` (option ``reader=simple``): the
-  driver-side prefetching reader — fine for tailing rotating app logs
-  (the reference's use case) and kept as the simplest-possible
-  implementation of the same offsets.
+One reader, ``LogfileStreamReader``, a partition-parallel
+``DataSourceStreamReader``.  The driver's ``latestOffset`` only
+inspects file tails (a bounded backwards scan for the last first-line
+start — the largest safely-committable offset); executors then scan
+each file's ``[start, end)`` backlog with the batch source's
+``scan_partition_arrow``, split into ``maxPartitionBytes`` byte ranges
+exactly like the batch source, so a firehose catch-up of a 10 GB file
+fans out across the cluster and a tailed app log is one small task per
+live file.  Reads are hard-capped at the batch-end offset
+(``_CappedReader``), so a replayed batch sees exactly the bytes that
+existed at planning time even if the file has grown — deterministic
+exactly-once replay.
 """
 
 from __future__ import annotations
 
 import logging
-import re
 from dataclasses import dataclass
-from typing import Iterator, List, Tuple
+from typing import Iterator, List
 
-from pyspark.errors import PySparkNotImplementedError
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 from hadoop_logfile_inputformat_spark.sources.logfile import (
     DEFAULT_MAX_PARTITION_BYTES,
     PatternResolver,
-    _CappedReader,
     _COMPRESSION_OPENERS,
     _UNSUPPORTED_COMPRESSION,
     _file_exists,
     _file_size,
+    _first_line_bytes_regex,
     _list_files,
     _open_raw,
-    iter_records,
+    _scanner_option,
     scan_partition_arrow,
 )
 
@@ -78,103 +67,6 @@ _NON_TAILABLE = tuple(_COMPRESSION_OPENERS) + _UNSUPPORTED_COMPRESSION
 
 def _tailable(path: str) -> bool:
     return not path.lower().endswith(_NON_TAILABLE)
-
-
-class LogfileSimpleStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options):
-        self.options = options
-        self.resolver = PatternResolver.from_options(options)
-        path_spec = options.get("path")
-        if not path_spec:
-            raise ValueError("logfile-stream source requires a load path")
-        self.path_spec = path_spec
-        self.tail_stable_batches = int(options.get("tailstablebatches", 2))
-        self.encoding = options.get("encoding", "utf-8")
-        # per-path count of consecutive polls with unchanged size, and
-        # the last size observed (NOT the committed offset — a held-back
-        # tail keeps offset < size even when the file stopped growing)
-        self._stable_polls: dict = {}
-        self._last_size: dict = {}
-
-    def _files(self):
-        # shared local/remote lister (sources.logfile._list_files):
-        # empty result is fine — files may appear after the stream starts
-        return [p for p in _list_files(self.path_spec) if _tailable(p)]
-
-    def initialOffset(self) -> dict:
-        # start of every currently-visible file; new files join at 0
-        return {"files": {}}
-
-    def _scan_new_records(
-        self, path: str, start_pos: int, end_pos: int, final: bool
-    ) -> Tuple[list, int]:
-        """Records of [start_pos, end_pos); returns (rows, safe_pos).
-
-        ``safe_pos`` is the position after the last *complete* record —
-        the offset the stream commits.  When ``final`` (file stopped
-        growing), the dangling tail is emitted and safe_pos = end_pos.
-        """
-        pattern = self.resolver.resolve(path)
-        regex = re.compile(pattern)
-        rows = []
-        with _open_raw(path) as f:
-            # cap reads at end_pos: a replay must see exactly the bytes
-            # that existed when the range was committed, even if
-            # continuation lines were appended since (deterministic
-            # exactly-once replay; the live read is unaffected because
-            # its dangling tail is held back anyway)
-            recs = list(
-                iter_records(
-                    _CappedReader(f, end_pos), start=start_pos, end=end_pos,
-                    regex=regex, encoding=self.encoding,
-                )
-            )
-        if not recs:
-            return [], start_pos
-        if final:
-            return [(path, off, rec) for off, rec in recs], end_pos
-        # hold back the tail record: it may still be growing
-        *complete, (tail_off, _) = recs
-        return [(path, off, rec) for off, rec in complete], tail_off
-
-    def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        tracked = dict(start.get("files", {}))
-        rows: list = []
-        new_offsets: dict = {}
-        for path in self._files():
-            pos = int(tracked.get(path, 0))
-            size = _file_size(path)
-            if size == self._last_size.get(path):
-                self._stable_polls[path] = self._stable_polls.get(path, 0) + 1
-            else:
-                self._stable_polls[path] = 0
-            self._last_size[path] = size
-            final = self._stable_polls.get(path, 0) >= self.tail_stable_batches
-            if size > pos:
-                batch_rows, safe = self._scan_new_records(path, pos, size, final)
-                rows.extend(batch_rows)
-                new_offsets[path] = safe
-            else:
-                new_offsets[path] = pos
-        # keep offsets for files that vanished (rotation): frozen
-        for path, pos in tracked.items():
-            new_offsets.setdefault(path, pos)
-        return iter(rows), {"files": new_offsets}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
-        """Deterministic replay of [start, end) per file (recovery)."""
-        s = start.get("files", {})
-        e = end.get("files", {})
-        rows: list = []
-        for path, end_pos in e.items():
-            start_pos = int(s.get(path, 0))
-            end_pos = int(end_pos)
-            if end_pos > start_pos and _file_exists(path):
-                batch_rows, _ = self._scan_new_records(
-                    path, start_pos, end_pos, final=True
-                )
-                rows.extend(batch_rows)
-        return iter(rows)
 
 
 @dataclass(frozen=True)
@@ -197,11 +89,9 @@ class LogfileStreamPartition(InputPartition):
 class LogfileStreamReader(DataSourceStreamReader):
     """Partition-parallel streaming reader (see module docstring).
 
-    Offset json: ``{"files": {path: committed_byte_pos}}`` — identical
-    to the simple reader, so checkpoints express the same progress
-    model either way.  Committed positions are always first-line starts
-    (or a stable-file EOF), which is what makes byte-capped re-scans
-    reproduce batches exactly.
+    Offset json: ``{"files": {path: committed_byte_pos}}``.  Committed
+    positions are always first-line starts (or a stable-file EOF),
+    which is what makes byte-capped re-scans reproduce batches exactly.
     """
 
     def __init__(self, options):
@@ -213,7 +103,7 @@ class LogfileStreamReader(DataSourceStreamReader):
         self.path_spec = path_spec
         self.tail_stable_batches = int(options.get("tailstablebatches", 2))
         self.encoding = options.get("encoding", "utf-8")
-        self.scanner = options.get("scanner", "chunked")
+        self.scanner = _scanner_option(options)
         self.max_partition_bytes = int(
             options.get("maxpartitionbytes", DEFAULT_MAX_PARTITION_BYTES)
         )
@@ -247,8 +137,7 @@ class LogfileStreamReader(DataSourceStreamReader):
         file tail.  ``lo`` must be a committed offset (line-aligned);
         a longer jump lands mid-line and realigns with the ``-1`` trick.
         """
-        pattern = self.resolver.resolve(path)
-        bpat = re.compile(b"(?m)^(?:" + pattern.encode(self.encoding) + b")\r?$")
+        bpat = _first_line_bytes_regex(self.resolver.resolve(path), self.encoding)
         with _open_raw(path) as f:
             if hi - lo <= self.tail_scan_bytes:
                 base = lo
@@ -349,9 +238,9 @@ class LogfileStreamDataSource(DataSource):
     """``spark.readStream.format("logfile-stream")`` — see module doc.
 
     Same options as the batch ``logfile`` source (``pattern``,
-    ``pattern.<path>``, ``maxPartitionBytes``, ``scanner``) plus
-    ``tailStableBatches``, ``tailScanBytes``, and ``reader``
-    (``partitioned`` default | ``simple``).
+    ``pattern.<path>``, ``preset``, ``encoding``, ``maxPartitionBytes``,
+    ``maxRecordBytes``, ``scanner``) plus ``tailStableBatches``,
+    ``tailScanBytes`` and ``ignoreMissingFiles``.
     """
 
     @classmethod
@@ -362,15 +251,7 @@ class LogfileStreamDataSource(DataSource):
         return "path string, offset bigint, record string"
 
     def streamReader(self, schema) -> LogfileStreamReader:
-        if self.options.get("reader", "partitioned") == "simple":
-            # triggers Spark's documented fallback to simpleStreamReader
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
-            )
         return LogfileStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> LogfileSimpleStreamReader:
-        return LogfileSimpleStreamReader(self.options)
 
 
 def register_logfile_stream_source(spark) -> None:

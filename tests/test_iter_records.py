@@ -138,79 +138,7 @@ def test_property_split_invariance(records, n_splits):
     assert got == golden
 
 
-# ---- chunked scanner: must be indistinguishable from the line scanner ----
-
-from hadoop_logfile_inputformat_spark.sources.logfile import iter_records_chunked
-
-
-def _read_all_chunked(data: bytes, splits, chunk_bytes=1 << 22, cap=0):
-    out = []
-    for start, end in splits:
-        out.extend(
-            iter_records_chunked(
-                io.BytesIO(data), start=start, end=end, pattern=PAT.pattern,
-                chunk_bytes=chunk_bytes, max_record_bytes=cap,
-            )
-        )
-    return out
-
-
-@pytest.mark.parametrize("chunk_bytes", [3, 17, 64, 1 << 22])
-def test_chunked_matches_line_scanner_all_cuts(chunk_bytes):
-    """Every single-split boundary × tiny chunk sizes (chunk boundaries
-    land mid-line, mid-record, on match starts)."""
-    data = _mk_log([("alpha", 0), ("beta", 3), ("gamma", 1), ("delta", 0)])
-    for cut in range(1, len(data)):
-        splits = [(0, cut), (cut, len(data))]
-        assert _read_all_chunked(data, splits, chunk_bytes) == _read_all(
-            data, splits
-        ), f"cut={cut} chunk={chunk_bytes}"
-
-
-def test_chunked_crlf_and_garbage_parity():
-    for data in (
-        b"2024-01-01 a\r\n\tcont\r\n2024-01-02 b\r\n",
-        b"junk\nmore junk\n2024-01-01 x\n\tc\n",
-        b"2024-01-01 only",  # no trailing newline
-        b"",
-    ):
-        assert _read_all_chunked(data, [(0, len(data))], 8) == _read_all(
-            data, [(0, len(data))]
-        )
-
-
-def test_chunked_max_record_bytes_parity():
-    body = b"2024-01-01 start\n" + b"x" * 100 + b"\n" + b"y" * 100 + b"\n"
-    got = _read_all_chunked(body, [(0, len(body))], 16, cap=50)
-    want = list(
-        iter_records(io.BytesIO(body), start=0, end=-1, regex=PAT, max_record_bytes=50)
-    )
-    assert got == want
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    records=st.lists(
-        st.tuples(
-            st.text(
-                alphabet=st.characters(blacklist_characters="\n\r", codec="utf-8"),
-                max_size=20,
-            ).filter(lambda s: not s.startswith("\t")),
-            st.integers(min_value=0, max_value=4),
-        ),
-        min_size=1,
-        max_size=30,
-    ),
-    n_splits=st.integers(min_value=1, max_value=12),
-    chunk_bytes=st.sampled_from([5, 23, 128, 4096]),
-)
-def test_property_chunked_equals_line(records, n_splits, chunk_bytes):
-    data = _mk_log(records)
-    splits = _splits_of(len(data), n_splits)
-    assert _read_all_chunked(data, splits, chunk_bytes) == _read_all(data, splits)
-
-
-# ---- vectorized list scanner: the default read path must also be
+# ---- chunked scanner (the default read path): must be
 # indistinguishable from the line scanner ----
 
 from hadoop_logfile_inputformat_spark.sources.logfile import (
@@ -218,12 +146,12 @@ from hadoop_logfile_inputformat_spark.sources.logfile import (
 )
 
 
-def _read_all_vectorized(data: bytes, splits, chunk_bytes=1 << 22):
+def _read_all_vectorized(data: bytes, splits, chunk_bytes=1 << 22, cap=0):
     out = []
     for start, end in splits:
         for offsets, records in iter_record_lists_chunked(
             io.BytesIO(data), start=start, end=end, pattern=PAT.pattern,
-            chunk_bytes=chunk_bytes,
+            chunk_bytes=chunk_bytes, max_record_bytes=cap,
         ):
             out.extend(
                 (o, r.decode("utf-8", errors="replace"))
@@ -240,6 +168,15 @@ def test_vectorized_matches_line_scanner_all_cuts(chunk_bytes):
         assert _read_all_vectorized(data, splits, chunk_bytes) == _read_all(
             data, splits
         ), f"cut={cut} chunk={chunk_bytes}"
+
+
+def test_chunked_max_record_bytes_parity():
+    body = b"2024-01-01 start\n" + b"x" * 100 + b"\n" + b"y" * 100 + b"\n"
+    got = _read_all_vectorized(body, [(0, len(body))], 16, cap=50)
+    want = list(
+        iter_records(io.BytesIO(body), start=0, end=-1, regex=PAT, max_record_bytes=50)
+    )
+    assert got == want
 
 
 def test_vectorized_crlf_and_garbage_parity():
@@ -314,9 +251,6 @@ def test_vectorized_cr_cr_lf_parity_all_cuts():
             assert _read_all_vectorized(data, splits, chunk_bytes) == _read_all(
                 data, splits
             ), f"cut={cut} chunk={chunk_bytes}"
-            assert _read_all_chunked(data, splits, chunk_bytes) == _read_all(
-                data, splits
-            ), f"cut={cut} chunk={chunk_bytes} (chunked)"
 
 
 @settings(max_examples=250, deadline=None)
@@ -344,7 +278,51 @@ def test_property_cr_in_bodies_parity(records, eols, n_splits, chunk_bytes):
     splits = _splits_of(len(data), n_splits)
     want = _read_all(data, splits)
     assert _read_all_vectorized(data, splits, chunk_bytes) == want
-    assert _read_all_chunked(data, splits, chunk_bytes) == want
+
+
+@pytest.mark.parametrize(
+    "encoding, cap",
+    [("latin-1", 0), ("ascii", 0), ("utf-8", 40), ("latin-1", 40), ("ascii", 25)],
+)
+def test_scan_partition_arrow_encoding_and_cap_parity(tmp_path, encoding, cap):
+    """The reader's entry point on the chunked scanner for a non-UTF-8
+    encoding (per-record decode: one U+FFFD per non-ASCII byte under
+    ascii) and for max_record_bytes > 0 (truncated like the line
+    scanner), across split points."""
+    from hadoop_logfile_inputformat_spark.sources.logfile import (
+        scan_partition_arrow,
+    )
+
+    data = (
+        "2024-01-01 café\n".encode("utf-8")
+        + b"\tcontinuation and " + b"x" * 30 + b"\r\n"
+        + b"\t" + b"y" * 40 + b"\n"
+        + b"2024-01-02 short\r\n"
+        + b"2024-01-03 " + b"z" * 50 + b"\n\tcont\n"
+    )
+    path = tmp_path / "enc.log"
+    path.write_bytes(data)
+    for splits in ([(0, len(data))], _splits_of(len(data), 3), _splits_of(len(data), 7)):
+        got, want = [], []
+        for start, end in splits:
+            for batch in scan_partition_arrow(
+                str(path), start, end, PAT.pattern,
+                encoding=encoding, max_record_bytes=cap,
+            ):
+                got.extend(zip(batch.column(1).to_pylist(), batch.column(2).to_pylist()))
+            want.extend(
+                iter_records(
+                    io.BytesIO(data), start=start, end=end, regex=PAT,
+                    encoding=encoding, max_record_bytes=cap,
+                )
+            )
+        assert got == want, splits
+        assert len(got) == 3
+    # valid UTF-8 still decodes as ``encoding`` says: 'cafÃ©' under
+    # latin-1, 'caf\ufffd\ufffd' under ascii
+    assert got[0][1].startswith("2024-01-01 " + "café".encode().decode(encoding, "replace"))
+    if cap:  # the cap dropped a continuation line of records 1 and 3
+        assert "yyy" not in got[0][1] and "cont" not in got[2][1]
 
 
 def test_pattern_resolver_exact_case_first():
@@ -401,11 +379,12 @@ def test_property_chunked_crlf_cap_parity(records, eols, cap, n_splits, chunk_by
     scanners' truncation accounting must agree byte-for-byte — the
     chunked scanner keeps each line's \\r so its +1-per-line accounting
     equals the line scanner's len(raw) — across caps landing anywhere
-    relative to line boundaries, mixed terminators, split sweeps, and
-    chunk sizes that slice mid-CRLF."""
+    relative to line boundaries (middle, chunk-edge and split-closed
+    records alike), mixed terminators, split sweeps, and chunk sizes
+    that slice mid-CRLF."""
     data = _mk_log_mixed_eol(records, eols)
     splits = _splits_of(len(data), n_splits)
-    got = _read_all_chunked(data, splits, chunk_bytes, cap=cap)
+    got = _read_all_vectorized(data, splits, chunk_bytes, cap=cap)
     want = []
     for start, end in splits:
         want.extend(

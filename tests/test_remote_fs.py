@@ -162,24 +162,30 @@ def test_local_paths_never_touch_fsspec(tmp_path, monkeypatch):
 
 
 def test_remote_simple_stream_reader(fake_fsspec):
-    """The simple streaming reader (driver-side reads) tails a remote
-    file: first poll emits all complete records and holds back the
-    dangling tail; growth emits the newly-completed records."""
+    """The stream reader tails a remote file: the first poll commits
+    every complete record and holds back the dangling tail; growth
+    commits the newly-completed record."""
     from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
-        LogfileSimpleStreamReader,
+        LogfileStreamReader,
     )
 
-    r = LogfileSimpleStreamReader({"path": "mem://logs/*.log", "pattern": PAT})
-    rows, off = r.read(r.initialOffset())
-    rows = list(rows)
+    def batch(start, end):
+        rows = []
+        for p in r.partitions(start, end):
+            for b in r.read(p):
+                rows.extend(zip(b.column(1).to_pylist(), b.column(2).to_pylist()))
+        return sorted(rows)
+
+    r = LogfileStreamReader({"path": "mem://logs/*.log", "pattern": PAT})
+    off = r.latestOffset()
     expected = _expected()
     # tail record (last first-line start) held back until stable
-    assert [(o, rec) for _, o, rec in rows] == expected[:-1]
+    assert batch(r.initialOffset(), off) == expected[:-1]
     assert off["files"]["mem://logs/a.log"] == expected[-1][0]
     # append one record: the previously-dangling record completes
     fake_fsspec.files["logs/a.log"] = LOG + b"2024-01-04 delta\n"
-    rows2, off2 = r.read(off)
-    assert [rec for _, _, rec in rows2] == [expected[-1][1]]
+    off2 = r.latestOffset()
+    assert batch(off, off2) == [expected[-1]]
     assert off2["files"]["mem://logs/a.log"] == len(LOG)
 
 

@@ -117,10 +117,20 @@ def test_observe_scan_stream_metrics_in_progress(spark, tmp_path):
         q.stop()
 
 
-def test_logfile_stream_offsets_are_replayable(spark, tmp_path):
-    """readBetweenOffsets must reproduce a batch exactly (recovery)."""
+def _stream_rows(reader, start, end):
+    """The ``(path, offset, record)`` rows of one micro-batch, read the
+    way Spark does: ``partitions(start, end)`` then ``read`` each."""
+    rows = []
+    for p in reader.partitions(start, end):
+        for batch in reader.read(p):
+            rows.extend(zip(*(batch.column(i).to_pylist() for i in range(3))))
+    return rows
+
+
+def test_logfile_stream_offsets_are_replayable(tmp_path):
+    """A batch re-read from its offsets reproduces it exactly (recovery)."""
     from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
-        LogfileSimpleStreamReader,
+        LogfileStreamReader,
     )
 
     log = tmp_path / "x.log"
@@ -128,20 +138,19 @@ def test_logfile_stream_offsets_are_replayable(spark, tmp_path):
     log.write_text(
         "2024-01-01 a\n\tcont\n2024-01-02 b\n2024-01-03 c\n"
     )
-    r = LogfileSimpleStreamReader(
+    r = LogfileStreamReader(
         {"path": str(tmp_path), "pattern": pat, "tailstablebatches": 1}
     )
     start = r.initialOffset()
-    rows1, off1 = r.read(start)
-    rows1 = list(rows1)
-    replay = list(r.readBetweenOffsets(start, off1))
-    assert rows1 == replay
+    off1 = r.latestOffset()
+    rows1 = _stream_rows(r, start, off1)
+    assert _stream_rows(r, start, off1) == rows1
     # tail 'c' held back on the first poll (file not yet stable)
     texts = [rec for _, _, rec in rows1]
     assert texts == ["2024-01-01 a\n\tcont", "2024-01-02 b"]
     # second poll with no growth: file stable → tail flushes
-    rows2, off2 = r.read(off1)
-    assert [rec for _, _, rec in rows2] == ["2024-01-03 c"]
+    off2 = r.latestOffset()
+    assert [rec for _, _, rec in _stream_rows(r, off1, off2)] == ["2024-01-03 c"]
 
 
 def _event_stream(spark, tmp_path, rows):
@@ -511,24 +520,6 @@ def test_partitioned_reader_replay_deterministic_under_append(tmp_path):
     assert rows_replay == rows1, "replay saw bytes appended after commit"
 
 
-def test_simple_reader_replay_deterministic_under_append(tmp_path):
-    from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
-        LogfileSimpleStreamReader,
-    )
-
-    pat = r"\d{4}-\d{2}-\d{2} .*"
-    log = tmp_path / "y.log"
-    log.write_text("2024-01-01 a\n2024-01-02 b\n")
-    r = LogfileSimpleStreamReader({"path": str(tmp_path), "pattern": pat,
-                                   "tailstablebatches": 1})
-    start = r.initialOffset()
-    rows1, off1 = r.read(start)
-    rows1 = list(rows1)
-    with open(log, "a") as f:
-        f.write("\tappended-after-commit\n2024-01-03 c\n")
-    assert list(r.readBetweenOffsets(start, off1)) == rows1
-
-
 def test_stream_readers_exclude_compressed_rotation_artifacts(tmp_path):
     """The streaming offset model indexes raw bytes; a rotated .gz
     artifact appearing in the watched glob (dir/* matches app.log.1.gz)
@@ -537,7 +528,6 @@ def test_stream_readers_exclude_compressed_rotation_artifacts(tmp_path):
     import gzip
 
     from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
-        LogfileSimpleStreamReader,
         LogfileStreamReader,
     )
 
@@ -547,9 +537,25 @@ def test_stream_readers_exclude_compressed_rotation_artifacts(tmp_path):
         f.write("2023-12-31 23:59:59,000 | INFO | a | old\n")
     (tmp_path / "app.log.2.zst").write_bytes(b"\x28\xb5\x2f\xfd fake")
     opts = {"path": str(tmp_path), "pattern": FORMAT_A}
-    for reader_cls in (LogfileSimpleStreamReader, LogfileStreamReader):
-        files = reader_cls(opts)._files()
-        assert files == [str(live)], reader_cls.__name__
+    assert LogfileStreamReader(opts)._files() == [str(live)]
+
+
+@pytest.mark.parametrize("stream", [False, True])
+def test_readers_reject_unknown_scanner(tmp_path, stream):
+    """Both logfile readers validate ``scanner`` the same way: a typo
+    is a hard error, not a silent switch to the slower line scanner."""
+    from hadoop_logfile_inputformat_spark.sources.logfile import LogfileReader
+    from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
+        LogfileStreamReader,
+    )
+
+    (tmp_path / "app.log").write_text("2024-01-01 one\n")
+    opts = {"path": str(tmp_path), "pattern": r"\d{4}-\d{2}-\d{2} .*"}
+    make = LogfileStreamReader if stream else (lambda o: LogfileReader(None, o))
+    for ok in ("chunked", "line"):
+        assert make(dict(opts, scanner=ok)).scanner == ok
+    with pytest.raises(ValueError, match="scanner must be 'chunked' or 'line'"):
+        make(dict(opts, scanner="Chunked"))
 
 
 def test_near_dup_stream_probes_and_grows_index(spark, tmp_path):

@@ -25,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from hadoop_logfile_inputformat_spark.sources.logfile import (  # noqa: E402
     iter_record_lists_chunked,
     iter_records,
-    iter_records_chunked,
 )
 
 PAT = r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2},\d{3} \| \w+ \| \S+ \| .*"
@@ -71,8 +70,6 @@ def main() -> None:
             ("vectorized", lambda fh: (
                 offs for offs, _recs in iter_record_lists_chunked(
                     fh, start=0, end=size, pattern=PAT))),
-            ("chunked", lambda fh: iter_records_chunked(
-                fh, start=0, end=size, pattern=PAT)),
             ("line", lambda fh: iter_records(
                 fh, start=0, end=size, regex=re.compile(PAT))),
         ):
