@@ -348,15 +348,13 @@ def ann_ivf_topk(
         F.col("embedding").alias("c_emb"),
         F.col("nrm").alias("c_nrm"),
     )
-    # Nearest-centroid assignment via the shuffle-free literal-argmin
-    # projection (r17 — the same :func:`_assign_to_centroids` the
-    # index builders and the deleted/incremental twins already use;
-    # value parity with the old broadcast-cross-join + max_by regroup
-    # is exact: same per-pair double arithmetic, same
-    # (score, lowest-id) tie-break, proven row-identical on all three
-    # fixture SFs).  The join form re-grouped the WHOLE corpus —
-    # embedding payloads included — through a data-sized Exchange per
-    # invocation (guide §2.1: remove shuffles outright).
+    # Nearest-centroid assignment as a shuffle-free argmin projection
+    # against the centroids' one broadcast row — the same kernel the
+    # index builders, appends and the incremental twins use.  The
+    # former broadcast-cross-join + max_by regroup re-grouped the WHOLE
+    # corpus — embedding payloads included — through a data-sized
+    # Exchange per invocation; values are identical (same per-pair
+    # double arithmetic, same (score, lowest-id) tie-break).
     assigned = _assign_via_broadcast(v, cent)
     # the query subset never reads the assignment columns, so derive
     # it straight from the thin scan (bit-identical rows; saves the
@@ -574,38 +572,25 @@ def _metric_score(metric: str, vec: str, nrm: str, q_vec: str, q_nrm: str) -> Co
     raise ValueError(f"metric must be cosine/l2/ip, got {metric!r}")
 
 
-_ASSIGN_RENDER_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
+#: Frozen-content memo of a persisted index's small driver-side reads
+#: (stored rotation, live quantized count), keyed on the table's file
+#: signature (:func:`_table_files_key`) so any rewrite misses.
+_ASSIGN_RENDER_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _ASSIGN_RENDER_CACHE_MAX = 32
 
 #: Once-per-index-generation tier warnings already emitted (r15 ADVICE:
 #: a dedicated store, NOT _ASSIGN_RENDER_CACHE — eviction pressure from
-#: render/rotation keys there could re-fire a "once" warning, and the
-#: render cache's value type is tuples).  Bounded only as a leak guard;
-#: eviction at worst re-arms a warning, never changes results.
+#: rotation/count keys there could re-fire a "once" warning).  Bounded
+#: only as a leak guard; eviction at worst re-arms a warning, never
+#: changes results.
 _TIER_WARNED: set = set()
 _TIER_WARNED_MAX = 1024
-
-
-def _centroids_table_key(spark: SparkSession, name: str) -> tuple | None:
-    """Memoization key for a FROZEN ``<name>_centroids`` table's
-    rendered argmin literal: the table's file listing (path, length,
-    mtime).  Any retrain / rebuild / compaction rewrites the parquet
-    part files (new random filenames), so content changes always
-    change the key — including foreign-session rewrites, which plain
-    per-session caching would miss.  Cost: one driver-side metadata
-    listing of a one-file table (~ms) instead of the collect job +
-    ~100 KB literal render every lifecycle verb was paying per call
-    (r11 verdict: 2-3x per key against the same frozen centroids).
-    Returns None (no caching) if anything about the probe fails."""
-    table = f"{name}_centroids"
-    sig = _table_files_key(spark, table)
-    return None if sig is None else (table, sig)
 
 
 def _table_files_key(spark: SparkSession, table: str) -> tuple | None:
     """A catalog table's content fingerprint: DESCRIBE its location,
     list the files (path, length, mtime).  Shared by every
-    frozen-content memoization key (argmin render, rotation read) so
+    frozen-content memoization key (rotation read, live count) so
     the probe logic can't drift between them; None when anything about
     the probe fails (→ no caching)."""
     try:
@@ -622,7 +607,7 @@ def _table_files_key(spark: SparkSession, table: str) -> tuple | None:
 
 def _files_signature(spark: SparkSession, path: str) -> tuple | None:
     """Recursive (path, length, mtime) listing of ``path`` — the
-    content fingerprint behind the argmin-literal memoization keys.
+    content fingerprint behind the frozen-table memoization keys.
     Parquet rewrites always produce new part filenames, so any rewrite
     changes the signature even within mtime granularity."""
     try:
@@ -645,201 +630,87 @@ def _files_signature(spark: SparkSession, path: str) -> tuple | None:
         return None
 
 
-def _assign_to_centroids(
+def _assign_via_broadcast(
     v: DataFrame,
     cent: DataFrame,
     vec_col: str = "embedding",
     carry: tuple = (),
     metric: str = "cosine",
-    cache_key: tuple | None = None,
 ) -> DataFrame:
-    """(vec_id, <vec_col>, nrm, *carry, centroid_id, c_sim):
-    nearest-centroid assignment of ``v`` (``(vec_id, <vec_col>, nrm,
-    *carry)``) against the BROADCAST ``cent`` (``(centroid_id, c_emb,
-    c_nrm)``) — one corpus pass with a map-side ``max_by`` partial
-    (never a |corpus| x k shuffle); ties break to the lowest
-    centroid_id.  ``c_sim`` is the winning score under ``metric``
-    (:func:`_metric_score` — cosine by default, higher-is-better for
-    all three) — the quantization-quality signal the ``_stats`` drift
-    ledger aggregates.  ``carry`` names metadata columns of ``v`` that
-    ride through the assignment unchanged (the filtered-search payload
-    an index stores next to each vector).  Shared by the index
-    builders and the incremental appends so a delta assigns
+    """(vec_id, <vec_col>, nrm, *carry, centroid_id, c_sim): the one
+    nearest-centroid kernel — every IVF/IVFPQ build, append and inline
+    probe twin assigns ``v`` (``(vec_id, <vec_col>, nrm, *carry)``)
+    through it against ``cent`` (``(centroid_id, c_emb, c_nrm)``).
+    ``c_sim`` is the winning score under ``metric`` (:func:`_metric_score`
+    — cosine by default, higher-is-better for all three), the
+    quantization-quality signal the ``_stats`` drift ledger aggregates;
+    ties break to the lowest centroid_id.  ``carry`` names metadata
+    columns of ``v`` that ride through unchanged (the filtered-search
+    payload an index stores next to each vector), so a delta assigns
     bit-identically to how the seed corpus did.
 
-    Implementation is the shuffle-free literal-argmin form (the
-    Lloyd's-training technique): the centroids ride the expression
-    tree as one SQL literal, so the assignment is a pure PROJECTION —
-    the previous broadcast-cross-join + ``groupBy(vec_id)`` regrouped
-    the whole corpus (embedding payloads included) through an
-    Exchange per build/append.  Value parity with the join form is
-    exact: same per-pair double arithmetic (``repr`` floats
-    round-trip), same (score, lowest-id) tie-break — pinned by the
-    registry value-hash on ``ann_ivf_incremental`` plus the
-    append==rebuild and never-held-twin equalities.  (Degenerate
-    zero-norm vectors score NULL under cosine; their assignment is
-    unspecified in BOTH forms — gate such vectors out with
-    :func:`embedding_stats` before indexing.)
+    The centroids reach every task as ONE broadcast row of sorted
+    structs, and the argmin is an inline ``array_min`` projection over
+    it: the corpus is never joined to a centroid-sized side, regrouped,
+    or exchanged (broadcast nested-loop against a one-row build side).
+    The codegen source is small and constant whatever k x dim is — a
+    rendered centroid literal embeds every double into the expression
+    tree and re-paid Janino codegen on each fresh plan.  The per-pair
+    arithmetic is the column form's (zip_with CAST products summed in
+    element order; cosine divides by nrm * c_nrm), so values match
+    :func:`_metric_score` bit for bit.  Zero-norm vectors score NULL
+    under cosine and their assignment is unspecified — gate them out
+    with :func:`embedding_stats` before indexing.
 
-    ``cache_key`` (r12): callers whose centroid CONTENT is frozen and
-    key-identifiable (a ``<name>_centroids`` table via
-    :func:`_centroids_table_key`, or an immutable-fixture derivation)
-    memoize the collect + render — the verbs of one lifecycle call
-    this 2-3 times against the same frozen centroids, and a streaming
-    ingest calls it every micro-batch.  The key must change whenever
-    the content can (table keys carry the file listing), so a hit is
-    bit-identical to a fresh collect by construction."""
-    rendered = (
-        _ASSIGN_RENDER_CACHE.get(cache_key) if cache_key is not None else None
-    )
-    if rendered is None:
-        rows = cent.select("centroid_id", "c_emb", "c_nrm").collect()
-        rows.sort(key=lambda r: r["centroid_id"])
-        if not rows:
-            raise ValueError("centroid frame is empty")
-        cid_type = dict(cent.dtypes)["centroid_id"]
-        # PARALLEL PLAIN-ARRAY literals (vectors / norms / ids), indexed
-        # by position — NOT an array of named_structs: a struct-literal
-        # array this size costs seconds of analysis/codegen PER PLAN
-        # (measured 3.1s vs 0.3s cold for k=25 x dim=64), and an index
-        # build re-plans the assignment subtree several times (cache
-        # fill, training scans, writes)
-        lit = "array(" + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in r["c_emb"]) + ")"
-            for r in rows
-        ) + ")"
-        nrms = "array(" + ",".join(
-            f"{float(r['c_nrm'])!r}D" for r in rows
-        ) + ")"
-        cids = "array(" + ",".join(
-            f"CAST({r['centroid_id']} AS {cid_type})" for r in rows
-        ) + ")"
-        rendered = (lit, nrms, cids)
-        if cache_key is not None:
-            _ASSIGN_RENDER_CACHE[cache_key] = rendered
-            while len(_ASSIGN_RENDER_CACHE) > _ASSIGN_RENDER_CACHE_MAX:
-                _ASSIGN_RENDER_CACHE.popitem(last=False)
-    lit, nrms, cids = rendered
-    # same double arithmetic as _metric_score's column form: zip_with
-    # CAST products summed in element order, divided by (nrm * c_nrm)
+    An empty ``cent`` fails the job (``raise_error`` on the build side)
+    instead of assigning NULL centroid ids.
+    """
     dot = (
-        f"aggregate(zip_with({vec_col}, c, (x, y) ->"
+        f"aggregate(zip_with({vec_col}, e.emb, (x, y) ->"
         f" CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
     if metric == "cosine":
-        score = f"{dot} / (nrm * element_at({nrms}, i + 1))"
+        score = f"{dot} / (nrm * e.cnrm)"
     elif metric == "ip":
         score = dot
     elif metric == "l2":
         score = (
-            f"-aggregate(zip_with({vec_col}, c, (x, y) ->"
+            f"-aggregate(zip_with({vec_col}, e.emb, (x, y) ->"
             f" (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
             f" * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
             f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
         )
     else:
         raise ValueError(f"metric must be cosine/l2/ip, got {metric!r}")
-    # min (negated score, cid) == max score with ties to the LOWEST
-    # centroid_id — the join form's max_by(cid, struct(c_sim, -cid)).
-    # The PARSED Column is cached too (keyed per application — a
-    # Column's JVM expression dies with its SparkContext): F.expr on a
-    # ~100 KB+ literal pays a py4j transfer + parse per call (~0.3s at
-    # k=80 x dim=64) that repeat verbs against frozen centroids
-    # needn't re-pay
-    expr_key = (
-        None
-        if cache_key is None
-        else (
-            "col",
-            v.sparkSession.sparkContext.applicationId,
-            cache_key,
-            vec_col,
-            metric,
-        )
-    )
-    best = (
-        _ASSIGN_RENDER_CACHE.get(expr_key) if expr_key is not None else None
-    )
-    if best is None:
-        best = F.expr(
-            f"array_min(transform({lit}, (c, i) ->"
-            f" struct(-({score}) AS negs,"
-            f" element_at({cids}, i + 1) AS cid)))"
-        )
-        if expr_key is not None:
-            _ASSIGN_RENDER_CACHE[expr_key] = best
-            while len(_ASSIGN_RENDER_CACHE) > _ASSIGN_RENDER_CACHE_MAX:
-                _ASSIGN_RENDER_CACHE.popitem(last=False)
-    # `_best` gets its own projection: the struct feeds two outputs,
-    # and CollapseProject leaves non-cheap aliases uncollapsed, so the
-    # k x dim argmin evaluates once per row (plan-asserted)
-    return v.select(
-        "vec_id", vec_col, "nrm", *carry, best.alias("_best")
-    ).select(
-        "vec_id",
-        vec_col,
-        "nrm",
-        *carry,
-        F.col("_best.cid").alias("centroid_id"),
-        (-F.col("_best.negs")).alias("c_sim"),
-    )
-
-
-def _assign_via_broadcast(
-    v: DataFrame,
-    cent: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, <vec_col>, nrm, centroid_id, c_sim): nearest-centroid
-    COSINE assignment with the centroids riding as ONE broadcast row
-    of sorted structs instead of :func:`_assign_to_centroids`' SQL
-    literal.  Same argmin, same per-pair double arithmetic (zip_with
-    CAST products summed in element order, divided by nrm·c_nrm),
-    same (score, lowest-cid) tie-break — value-identical by
-    construction and pinned by the same registry hashes.
-
-    Why a second form (r17): the literal render embeds k×dim doubles
-    (~100 KB at fixture geometry) into the expression tree, and every
-    FRESH invocation of an inline probe twin re-pays Janino codegen of
-    that source (~2 s of the twins' 2.7-3.2 s steady on the r16
-    driver artifact — profiled: exec on a fresh plan object 2.0-2.5 s
-    vs 0.13 s on a reused one, with execution proper trivial).  The
-    builders keep the literal form — they re-plan one assignment
-    subtree against FROZEN centroids many times per build, where the
-    memoized parse amortizes and no per-call codegen recurs.  Here the
-    centroids arrive as a plan-size-free broadcast column: codegen
-    source is small and constant, the corpus still never shuffles
-    (broadcast nested-loop of a one-row side), and the only extra
-    work is the centroid-side aggregate job the literal form paid as
-    a driver collect anyway.
-
-    Empty ``cent`` yields NULL assignments (the literal form raises);
-    the inline twins run over non-empty fixture corpora where the
-    distinction cannot arise.
-    """
     cents = cent.agg(
         F.expr(
             "array_sort(collect_list(struct(centroid_id AS cid,"
             " c_emb AS emb, c_nrm AS cnrm))) AS __cents"
         )
+    ).select(
+        F.expr(
+            "if(size(__cents) > 0, __cents,"
+            " raise_error('centroid frame is empty')) AS __cents"
+        )
     )
-    dot = (
-        f"aggregate(zip_with({vec_col}, e.emb, (x, y) ->"
-        f" CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
+    # min (negated score, cid) == max score with ties to the LOWEST
+    # centroid_id.  `_best` gets its own projection: the struct feeds
+    # two outputs, and CollapseProject leaves non-cheap aliases
+    # uncollapsed, so the k x dim argmin evaluates once per row
+    # (plan-asserted)
     best = F.expr(
         f"array_min(transform(__cents, e ->"
-        f" struct(-({dot} / (nrm * e.cnrm)) AS negs, e.cid AS cid)))"
+        f" struct(-({score}) AS negs, e.cid AS cid)))"
     )
     return (
         v.join(F.broadcast(cents), how="cross")
-        .select("vec_id", vec_col, "nrm", best.alias("_best"))
+        .select("vec_id", vec_col, "nrm", *carry, best.alias("_best"))
         .select(
             "vec_id",
             vec_col,
             "nrm",
+            *carry,
             F.col("_best.cid").alias("centroid_id"),
             (-F.col("_best.negs")).alias("c_sim"),
         )
@@ -1342,7 +1213,7 @@ def build_ivf_index(
 
     check_index_lease(spark, name, path)
     # persisted for the build: the nrm HOF would otherwise re-inline
-    # into every per-centroid lambda of the literal-argmin assignment
+    # into every per-centroid lambda of the argmin assignment
     # (see build_ivfpq_index's quantize note — measured 25x re-eval)
     v = vectors.select(
         "vec_id", "embedding", _norm("embedding").alias("nrm"), *carry
@@ -1366,7 +1237,7 @@ def build_ivf_index(
     # so the build pays zero extra passes for the ledger baseline
     obs = Observation()
     assigned = (
-        _assign_to_centroids(v, cent, carry=carry, metric=metric)
+        _assign_via_broadcast(v, cent, carry=carry, metric=metric)
         .observe(obs, F.count("*").alias("n"), F.avg("c_sim").alias("s"))
         .select("vec_id", "embedding", "nrm", *carry, "centroid_id")
     )
@@ -1441,7 +1312,7 @@ def _pq_index_metric(spark: SparkSession, name: str) -> str:
 #: job on the hot probe path — the same cost class _read_rotation_cached
 #: exists for.  Keyed on the metric table's file signature, so a
 #: retrain (new files) naturally invalidates.  Dedicated store, not
-#: _ASSIGN_RENDER_CACHE (its declared value type is render tuples).
+#: _ASSIGN_RENDER_CACHE, so probe-loop eviction there never re-reads it.
 _METRIC_CACHE: "OrderedDict[tuple, str]" = OrderedDict()
 _METRIC_CACHE_MAX = 64
 
@@ -1795,9 +1666,8 @@ def append_to_ivf_index(
     # repeated refreshes hold at most one cached delta frame; the delta
     # assigns under the INDEX's serving metric, exactly as the seed did
     assigned = scoped_persist(
-        _assign_to_centroids(
-            v, cent, carry=carry, metric=_index_metric(spark, name),
-            cache_key=_centroids_table_key(spark, name),
+        _assign_via_broadcast(
+            v, cent, carry=carry, metric=_index_metric(spark, name)
         ),
         ("ivf_append", name),
     )
@@ -1873,10 +1743,9 @@ def append_to_ivfpq_index(
     # assigns under the INDEX's serving metric (r16), exactly as the
     # seed did — the append == rebuild bit-equality depends on it
     assigned = scoped_persist(
-        _assign_to_centroids(
+        _assign_via_broadcast(
             qv, cent, vec_col="q", carry=carry,
             metric=_index_metric(spark, name),
-            cache_key=_centroids_table_key(spark, name),
         ),
         ("ivfpq_append", name),
     )
@@ -1899,7 +1768,7 @@ def append_to_ivfpq_index(
             res.withColumn("q", F.expr(_rotate_expr("q", R))),
             ("ivfpq_append_rot", name),
         )
-    codes = _pq_encode_fused(
+    codes = _pq_encode_bcast(
         res, cb, carry=("centroid_id", "nrm", *carry)
     )
     if not recovering or _delta_missing_from(spark, f"{name}_codes", qv):
@@ -2016,7 +1885,7 @@ def append_to_pq_index(
         )
     )
     codes = scoped_persist(
-        _pq_encode_fused(enc_in, cb, carry=("nrm", *carry)),
+        _pq_encode_bcast(enc_in, cb, carry=("nrm", *carry)),
         ("pq_append", name),
     )
     if not recovering or _delta_missing_from(spark, f"{name}_codes", qv):
@@ -2657,7 +2526,7 @@ def ann_ivf_incremental(
     so this member's DuckDB value-hash gates the table path too.
 
     Plan shape matches :func:`ann_ivf_topk`: broadcast centroids,
-    map-side ``max_by`` assignment, broadcast probes — no corpus
+    argmin-projection assignment, broadcast probes — no corpus
     shuffle anywhere (the delta predicate changes selectivity, not the
     plan).
     """
@@ -3484,10 +3353,9 @@ def recommended_rerank(n_corpus: int | None, base: int = PQ_RERANK) -> int:
 
 def _pq_parts(v, id_col: str = "vec_id", carry: tuple = ()):
     """(id, [carry...], m, sub): the PQ_M subvectors of each quantized
-    vector.  ``carry`` columns of ``v`` ride along per part row —
-    per-vector constants (centroid_id, nrm) that downstream encode can
-    then keep through its group-by instead of re-joining the corpus on
-    vec_id (see :func:`_pq_encode`)."""
+    vector — the row form the modulus codebook, the Lloyd's codebook
+    training and the per-query ADC lookup tables are built from.
+    ``carry`` columns of ``v`` ride along per part row."""
     sub = F.explode(
         F.array(
             *[
@@ -3584,48 +3452,6 @@ def _pq_modulus_codebooks(v: DataFrame, eff_mod: int) -> DataFrame:
         .withColumn("c_nrm2", F.expr(
             "aggregate(c_sub, CAST(0.0 AS DOUBLE), (a, x) -> a + x * x)"
         ))
-    )
-
-
-def _pq_encode(parts: DataFrame, cb: DataFrame, carry: tuple = ()) -> DataFrame:
-    """(vec_id, m, code, code_nrm2[, carry...]): encode PQ subvectors
-    against a broadcast codebook — argmin ||x − c||² per (vector,
-    subspace); x·x is constant per group, so score = |c|² − 2·x·c
-    (exact integers under the modulus codebook; double arithmetic
-    under learned float entries).  Map-side ``min_by`` partial — never
-    a |corpus| ranking window.  ``carry`` columns (per-vector
-    constants riding ``parts`` via :func:`_pq_parts`) pass through the
-    SAME group-by as ``first()`` aggregates, so callers that need
-    (centroid_id, nrm) next to the codes get them without a second
-    corpus-sized exchange — the IVFADC build/append used to re-join
-    the residual frame on vec_id here, shuffling the corpus twice."""
-    score = F.col("c_nrm2") - 2 * _dot("sub", "c_sub")
-    return (
-        parts.join(F.broadcast(cb), "m")
-        .select(
-            "vec_id", *carry, "m", "entry_id", "c_nrm2",
-            score.alias("score"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(
-            F.expr(
-                "min_by(struct(entry_id, c_nrm2, score),"
-                " struct(score, entry_id))"
-            ).alias("ce"),
-            *[F.first(c).alias(c) for c in carry],
-        )
-        .select(
-            "vec_id", "m",
-            F.col("ce.entry_id").alias("code"),
-            F.col("ce.c_nrm2").alias("code_nrm2"),
-            # dot of the subvector with its CHOSEN entry, recovered from
-            # the argmin's own score (score = |c|² − 2·x·c): summing it
-            # over m gives the ADC self-similarity numerator — the
-            # quantization-quality signal the PQ drift ledger uses, at
-            # zero extra scoring
-            ((F.col("ce.c_nrm2") - F.col("ce.score")) / 2).alias("code_dot"),
-            *carry,
-        )
     )
 
 
@@ -3812,9 +3638,9 @@ def learn_opq_rotation(
 def _rotate_expr(vec_col: str, R: list) -> str:
     """SQL for ``R @ <vec_col>`` with the (model-sized, d × d)
     rotation inlined as a nested array literal — a pure projection,
-    same no-join/no-exchange discipline as the fused encode.  CALLERS
-    MUST PIN the rotated frame before feeding it to
-    :func:`_pq_encode_fused` (the upstream-HOF re-inline landmine:
+    same no-exchange discipline as the encode.  CALLERS MUST PIN the
+    rotated frame before feeding it to :func:`_pq_encode_bcast` (the
+    upstream-HOF re-inline landmine:
     unpinned, the d² rotation would re-evaluate once per codebook
     entry)."""
     rlit = "array(" + ",".join(
@@ -3832,8 +3658,8 @@ def _rotation_rows(
     spark: SparkSession, R: list, kind: str = "opq"
 ) -> DataFrame:
     """The rotation as codebook-table rows: ``m = -1`` marks them (a
-    real subspace id is 0..PQ_M-1, so every consumer — the fused
-    encode's ``range(PQ_M)`` literal, the probe LUT's join on the
+    real subspace id is 0..PQ_M-1, so every consumer — the
+    encode's by-``m`` entry selection, the probe LUT's join on the
     query parts' ``m`` — is naturally blind to them), ``entry_id``
     orders the rows, ``c_sub`` carries the row vector.  Riding the
     codebooks table means :func:`maintenance.register_index` carries
@@ -3878,7 +3704,7 @@ def _read_rotation(cb: DataFrame) -> list | None:
 
 def _read_rotation_cached(spark: SparkSession, name: str) -> list | None:
     """:func:`_read_rotation` for a PERSISTED index, memoized on the
-    codebooks table's file signature (the :func:`_centroids_table_key`
+    codebooks table's file signature (the :func:`_table_files_key`
     discipline): a serving loop probes the same frozen index per
     query frame, and the rotation read is one tiny collect it needn't
     re-pay — while any rebuild/retrain (new part filenames) misses the
@@ -3973,9 +3799,9 @@ def _warn_if_tier_limited(
     callers' plans and outputs are untouched.
 
     Memoized in a DEDICATED store, not ``_ASSIGN_RENDER_CACHE`` (r15
-    ADVICE): the shared 32-entry render cache evicts under pressure
-    from argmin/rotation keys across many indexes, which would re-fire
-    a "once" warning — and its declared value type is render tuples.
+    ADVICE): the shared 32-entry memo evicts under pressure from
+    rotation/count keys across many indexes, which would re-fire a
+    "once" warning.
     The key embeds the ledger's file signature, so a retrain/append
     (new generation) naturally re-arms the warning."""
     import warnings
@@ -4002,98 +3828,6 @@ def _warn_if_tier_limited(
             "['tier_hint'] and SCALING.md's composed-remedy grid)",
             stacklevel=3,
         )
-
-
-def _pq_encode_fused(v: DataFrame, cb: DataFrame, carry: tuple = ()) -> DataFrame:
-    """One-pass PQ encode: same output as :func:`_pq_encode` —
-    ``(vec_id, m, code, code_nrm2, code_dot[, carry...])`` — computed
-    as a pure PROJECTION over the vector frame ``v`` (column ``q``)
-    instead of explode → broadcast-join → ``groupBy(vec_id, m)``.  The
-    codebook rides inside the expression tree as one nested SQL
-    literal (the :func:`_sql_centroid_array` technique that made
-    Lloyd's training shuffle-free), so the only corpus exchange left
-    in an index build is the bucketed write's own clustering — the
-    "fuse assign+encode before the write" shape the build docstrings
-    promise.  Bit-equal to :func:`_pq_encode` by construction: the
-    per-entry score is the identical ``|c|² − 2·x·c`` double
-    arithmetic (same ``zip_with``/``aggregate`` element order, same
-    CASTs) and ``array_min`` over ``struct(score, entry_id)`` is the
-    same tie-break as ``min_by`` — pinned in
-    tests/test_index_append.py's append == rebuild and
-    table-vs-inline-twin equalities, which run one side through this
-    and compare value-exactly.
-
-    Used by the index BUILD/APPEND paths (model-sized learned or
-    modulus codebooks — the literal is the broadcast in another
-    coat); the inline registry operators keep :func:`_pq_encode`
-    untouched so gated plans don't move."""
-    rows = cb.select("m", "entry_id", "c_sub", "c_nrm2").collect()
-    eid_type = dict(cb.dtypes)["entry_id"]
-    per_m: dict = {}
-    for r in rows:
-        per_m.setdefault(r["m"], []).append(r)
-    # PARALLEL PLAIN-ARRAY literals per subspace (entry vectors /
-    # |c|^2 / ids) — an array-of-named_structs literal costs seconds
-    # of analysis/codegen per plan at this size (see
-    # _assign_to_centroids), and builds re-plan the encode subtree
-    # several times
-    subs, n2s, eids = [], [], []
-    for m in range(PQ_M):
-        entries = sorted(per_m.get(m, []), key=lambda r: r["entry_id"])
-        if not entries:
-            raise ValueError(f"codebook has no entries for subspace m={m}")
-        subs.append(
-            "array(" + ",".join(
-                "array(" + ",".join(
-                    f"{float(x)!r}D" for x in r["c_sub"]
-                ) + ")"
-                for r in entries
-            ) + ")"
-        )
-        n2s.append(
-            "array(" + ",".join(
-                f"{float(r['c_nrm2'])!r}D" for r in entries
-            ) + ")"
-        )
-        eids.append(
-            "array(" + ",".join(
-                f"CAST({r['entry_id']} AS {eid_type})" for r in entries
-            ) + ")"
-        )
-    cb_sql = "array(" + ",".join(subs) + ")"
-    n2_sql = "array(" + ",".join(n2s) + ")"
-    eid_sql = "array(" + ",".join(eids) + ")"
-    # same double arithmetic as _pq_encode's `c_nrm2 - 2 * _dot(...)`:
-    # zip_with multiplies CAST-to-double pairs, aggregate sums in order
-    score = (
-        f"element_at(element_at({n2_sql}, mm + 1), i + 1)"
-        f" - 2 * aggregate(zip_with("
-        f"slice(q, mm * {PQ_SUBDIM} + 1, {PQ_SUBDIM}), c,"
-        f" (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    best = (
-        f"transform(sequence(0, {PQ_M - 1}), mm ->"
-        f" array_min(transform(element_at({cb_sql}, mm + 1), (c, i) ->"
-        f" struct({score} AS s,"
-        f" element_at(element_at({eid_sql}, mm + 1), i + 1) AS eid,"
-        f" element_at(element_at({n2_sql}, mm + 1), i + 1) AS n2))))"
-    )
-    # the argmin array gets its OWN projection BELOW the posexplode —
-    # collapsing them would hoist the whole M-argmin above the Generate
-    # and recompute it per exploded element (the Lloyd's-training trap,
-    # plan-pinned there in test_plan_quality.py)
-    enc = v.select("vec_id", *carry, F.expr(best).alias("_enc")).select(
-        "vec_id", *carry, F.posexplode("_enc").alias("m", "ce")
-    )
-    return enc.select(
-        "vec_id",
-        "m",
-        F.col("ce.eid").alias("code"),
-        F.col("ce.n2").alias("code_nrm2"),
-        ((F.col("ce.n2") - F.col("ce.s")) / 2).alias("code_dot"),
-        *carry,
-    )
 
 
 def _exact_rerank(
@@ -4141,45 +3875,67 @@ def _exact_rerank(
     )
 
 
-def _pq_encode_bcast(parts: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, code, code_nrm2): PQ encode with the codebook riding
-    as ONE broadcast row — per-subspace entry arrays indexed by ``m``
-    — instead of :func:`_pq_encode`'s broadcast-join +
-    ``groupBy(vec_id, m)`` min_by, which re-grouped the corpus parts
-    through a data-sized Exchange per invocation (r17; the PQ
-    counterpart of :func:`_assign_via_broadcast`, with the same
-    rationale and the same exactness argument: quantized components
-    are integer-valued, so ``|c|² − 2·x·c`` is exact in double
-    arithmetic and the (score, lowest entry_id) argmin is
-    order-independent — bit-equal to the join form by construction).
-    Used by the two-tier ADC search; the table-backed builders keep
-    :func:`_pq_encode_fused` (carry columns, literal-codebook plan
-    asserts)."""
+def _pq_encode_bcast(v: DataFrame, cb: DataFrame, carry: tuple = ()) -> DataFrame:
+    """(vec_id, m, code, code_nrm2, code_dot, *carry): the one PQ
+    encode kernel — every PQ-family build, append and inline ADC
+    search encodes the vector frame ``v`` (column ``q``) through it
+    against the codebook ``cb`` (``(m, entry_id, c_sub, c_nrm2)``).
+    Per (vector, subspace) it picks argmin ||x − c||²; x·x is constant
+    per subspace, so the score is ``|c|² − 2·x·c`` (exact integers under
+    the modulus codebook, double arithmetic under learned entries), ties
+    to the lowest entry_id.  ``code_dot`` is the subvector's dot with
+    its CHOSEN entry, recovered from the argmin's own score — summed
+    over m it is the ADC self-similarity numerator the PQ drift ledger
+    uses, at zero extra scoring.  ``carry`` columns of ``v`` (per-vector
+    constants such as centroid_id, nrm) ride through unchanged.
+
+    The codebook reaches every task as ONE broadcast row: ``__cbm``
+    holds PQ_M entry arrays, the i-th built from the rows whose OWN
+    ``m`` is i (rotation marker rows, ``m = -1``, are never selected).
+    A subspace without entries fails the job (``raise_error``) instead
+    of scoring later subspaces against the wrong entries.  All PQ_M
+    argmins run in one projection over the corpus — no corpus-side
+    join key, regroup or Exchange — followed by one explode."""
     cbm = (
         cb.groupBy("m")
-        .agg(F.expr(
-            "array_sort(collect_list(struct(entry_id, c_sub, c_nrm2)))"
-            " AS es"
-        ))
-        .groupBy()
-        .agg(F.expr("array_sort(collect_list(struct(m, es))) AS __cbm"))
+        .agg(F.expr("collect_list(struct(entry_id, c_sub, c_nrm2)) AS es"))
+        .agg(F.expr("collect_list(struct(m, es)) AS __all"))
+        .select(
+            F.expr(
+                f"transform(sequence(0, {PQ_M - 1}), i -> coalesce("
+                "get(filter(__all, x -> x.m = i), 0).es,"
+                " raise_error(concat('codebook has no entries for subspace m=',"
+                " CAST(i AS STRING))))) AS __cbm"
+            )
+        )
     )
     best = F.expr(
-        "array_min(transform(element_at(__cbm, m + 1).es, e ->"
-        " struct(e.c_nrm2 - 2 * aggregate(zip_with(sub, e.c_sub,"
+        "transform(__cbm, (es, i) -> array_min(transform(es, e ->"
+        " struct(e.c_nrm2 - 2 * aggregate(zip_with("
+        f"slice(q, i * {PQ_SUBDIM} + 1, {PQ_SUBDIM}), e.c_sub,"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) AS s,"
-        " e.entry_id AS eid, e.c_nrm2 AS cn)))"
+        " e.entry_id AS eid, e.c_nrm2 AS n2))))"
     )
-    return (
-        parts.join(F.broadcast(cbm), how="cross")
-        .select("vec_id", "m", best.alias("_b"))
-        .select(
-            "vec_id",
-            "m",
-            F.col("_b.eid").alias("code"),
-            F.col("_b.cn").alias("code_nrm2"),
-        )
+    # the argmin array gets its OWN projection BELOW the explode —
+    # collapsing them would hoist the whole M-argmin above the Generate
+    # and recompute it per exploded element (the Lloyd's-training trap).
+    # posexplode_outer, not posexplode: Spark infers `size(_enc) > 0`
+    # under an inner generator and inlines the M-way argmin into that
+    # filter (or the join condition), encoding every vector twice; the
+    # array always holds PQ_M entries, so the rows are the same
+    enc = (
+        v.join(F.broadcast(cbm), how="cross")
+        .select("vec_id", *carry, best.alias("_enc"))
+        .select("vec_id", *carry, F.posexplode_outer("_enc").alias("m", "ce"))
+    )
+    return enc.select(
+        "vec_id",
+        "m",
+        F.col("ce.eid").alias("code"),
+        F.col("ce.n2").alias("code_nrm2"),
+        ((F.col("ce.n2") - F.col("ce.s")) / 2).alias("code_dot"),
+        *carry,
     )
 
 
@@ -4196,22 +3952,19 @@ def _pq_adc_search(
     encode the quantized corpus ``v`` against ``cb``, ADC-shortlist the
     ``queries`` subset (rows of ``v``), exact-re-rank the shortlist.
     The plan shape — broadcast codebook encode as a PURE PROJECTION
-    (r17: the codebook rides as one broadcast row of per-subspace
-    entry arrays and the argmin evaluates in place — the former
-    ``_pq_encode`` broadcast-join + ``groupBy(vec_id, m)`` regrouped
-    the corpus through a data-sized Exchange per invocation, the same
-    shape the IVF twins shed this round), broadcast LUT, constant
-    re-rank fetches per query — identical for both codebook families.
-    Bit-equal to ``_pq_encode`` by construction: same
+    (:func:`_pq_encode_bcast`: the codebook rides as one broadcast row
+    of per-subspace entry arrays and the argmin evaluates in place,
+    never a corpus regroup), broadcast LUT, constant re-rank fetches
+    per query — identical for both codebook families.  Encoding is
     ``|c|² − 2·x·c`` double arithmetic (exact — integer-valued
-    quantized components), same (score, lowest entry_id) tie-break;
-    proven row-identical on all three fixture SFs and gated by the
-    ann_variants_pack value-hash.  ``metric`` (r16) swaps only the
-    two score expressions (ADC + re-rank), same contract as
+    quantized components) with the (score, lowest entry_id)
+    tie-break, gated by the ann_variants_pack value-hash.  ``metric``
+    (r16) swaps only the two score expressions (ADC + re-rank), same
+    contract as
     :func:`ann_pq_probe`; integer-valued quantized components keep
     every pre-round double exact, so the l2/ip forms stay
     value-hash-checkable cross-engine."""
-    codes = _pq_encode_bcast(_pq_parts(v), cb)
+    codes = _pq_encode_bcast(v, cb)
     # per-query lookup table: dot of each query subvector with each
     # codebook entry (|queries| × PQ_M × |codebook| rows — broadcast)
     lut = (
@@ -4563,7 +4316,7 @@ def build_pq_index(
         raise ValueError(f"metric must be cosine/l2/ip, got {metric!r}")
     check_index_lease(spark, name, path)
     # persisted for the build (see build_ivfpq_index: the quantize HOF
-    # would re-inline into the fused encode's per-entry lambdas)
+    # would re-inline into the encode's per-entry lambdas)
     qv = quantize_frame(vectors, carry=carry).persist()
     R, n_qv = None, None
     # the stored kind tag (r13): learned rotations tag themselves;
@@ -4591,7 +4344,7 @@ def build_pq_index(
     enc_src = qv
     if R is not None:
         # pinned: the d x d rotation HOF would re-inline into every
-        # per-entry lambda of the fused encode
+        # per-entry lambda of the encode
         enc_src = qv.withColumn("q", F.expr(_rotate_expr("q", R))).persist()
     if codebooks is not None:
         cb = codebooks.select("m", "entry_id", "c_sub", "c_nrm2")
@@ -4605,7 +4358,7 @@ def build_pq_index(
     # codes feed two consumers (the table write + the seed self-sim
     # agg); narrow rows (M ints + one double per vector), so the
     # persist is the resident-index footprint by construction
-    codes = _pq_encode_fused(enc_src, cb, carry=("nrm", *carry)).persist()
+    codes = _pq_encode_bcast(enc_src, cb, carry=("nrm", *carry)).persist()
     try:
         cw = (
             codes.select("vec_id", "m", "code", "code_nrm2", *carry)
@@ -4857,9 +4610,9 @@ def build_ivfpq_index(
     :func:`build_pq_index`).
 
     Scale shape: one |corpus| × |centroids| assignment pass against
-    the BROADCAST centroids (map-side ``max_by`` partial), one
+    the BROADCAST centroids (:func:`_assign_via_broadcast`), one
     residual-encode pass against the broadcast codebooks
-    (:func:`_pq_encode`), two bucketed writes.  The residual frame is
+    (:func:`_pq_encode_bcast`), two bucketed writes.  The residual frame is
     persisted for the duration of the build (codebook training scans
     it once per Lloyd iteration) and released before returning.  The
     driver only ever holds k×dim and M×n_entries×subdim training
@@ -4897,7 +4650,7 @@ def build_ivfpq_index(
         raise ValueError(f"metric must be cosine/l2/ip, got {metric!r}")
     check_index_lease(spark, name, path)
     # PERSISTED for the build's duration: the quantize HOF otherwise
-    # re-inlines into every per-centroid lambda of the literal-argmin
+    # re-inlines into every per-centroid lambda of the argmin
     # assignment (and into every Lloyd iteration) — measured 25x
     # re-evaluation, 24s -> 3s on the sf0.1 fixture's corpus pass
     qv = quantize_frame(vectors, carry=carry).persist()
@@ -4918,7 +4671,7 @@ def build_ivfpq_index(
             iters=iters,
             metric="l2" if metric == "l2" else "cosine",
         ).select("centroid_id", "c_emb", _norm("c_emb").alias("c_nrm"))
-    assigned = _assign_to_centroids(
+    assigned = _assign_via_broadcast(
         qv, cent, vec_col="q", carry=carry, metric=metric
     ).join(
         F.broadcast(cent.select("centroid_id", "c_emb", "c_nrm")),
@@ -5010,7 +4763,7 @@ def build_ivfpq_index(
         # computed once on the encode input) rides the encode so the
         # self-sim cosine divides by the right denominator.
         if write_qstats:
-            codes_full = _pq_encode_fused(
+            codes_full = _pq_encode_bcast(
                 enc_res.withColumn("rnrm", _norm("q")),
                 cb,
                 carry=("centroid_id", "nrm", "rnrm", *carry),
@@ -5021,7 +4774,7 @@ def build_ivfpq_index(
         else:
             # ephemeral build: no qstats consumer, so keep the exact
             # single-consumer encode->write plan (no persist, no rnrm)
-            codes = _pq_encode_fused(
+            codes = _pq_encode_bcast(
                 enc_res, cb, carry=("centroid_id", "nrm", *carry)
             ).select("vec_id", "centroid_id", "m", "code", "nrm", *carry)
         cw = (

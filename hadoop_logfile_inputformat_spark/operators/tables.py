@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,13 +109,19 @@ def scoped_persist(df: DataFrame, key) -> DataFrame:
     which case it is returned as-is so repeated invocations of one
     query hit the existing cache (Spark's CacheManager would dedupe
     the storage anyway; unpersisting it would throw the warm data away
-    and force a recompute per invocation)."""
+    and force a recompute per invocation).
+
+    The previous frame is reused only while it is still cached: a DROP
+    TABLE of a table it reads uncaches it (cascade), and its analyzed
+    plan still lists that table's deleted files — a rebuilt index's
+    append would otherwise execute the stale plan and fail with
+    FILE_NOT_EXIST."""
     prev = _QUERY_CACHE.get(key)
     if prev is not None:
         try:
             same = prev._jdf.queryExecution().analyzed().sameResult(
                 df._jdf.queryExecution().analyzed()
-            )
+            ) and prev.storageLevel != StorageLevel.NONE
         except Exception:
             same = False  # old session stopped / plan not analyzable
         if same:

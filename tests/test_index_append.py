@@ -687,32 +687,20 @@ def test_delete_ivfpq_probe_and_compaction_fold(spark):
         _drop(spark, "tdl_iq2", IVFPQ_SUFFIXES + tomb)
 
 
-def test_argmin_render_cache_invalidates_on_centroid_rewrite(spark):
-    """r12: lifecycle verbs memoize the rendered argmin literal per
-    (centroids table, file signature).  The key MUST change whenever
-    the table content can — a retrain rewrites the parquet part files,
-    so a post-retrain append assigns against the NEW centroids, never
-    a stale cached literal; and a cache hit is bit-identical to a
-    fresh collect (same rows, same sorted render)."""
+def test_post_retrain_append_assigns_to_current_centroids(spark):
+    """A retrain rewrites the centroids table; the next append must
+    assign against the NEW centroids — every appended row's centroid
+    id belongs to the current centroid set, never a stale one."""
     v = S._vectors(spark, SF).select("vec_id", "embedding")
     is_delta = F.col("vec_id") % S.INCR_SPLIT_MOD == S.INCR_DELTA_REM
     seed, delta = v.filter(~is_delta), v.filter(is_delta)
     name = "tia_cache"
     try:
         S.build_ivf_index(spark, seed, name)
-        k1 = S._centroids_table_key(spark, name)
-        assert k1 is not None
-        # append fills the cache; a second key probe is stable
         assert S.append_to_ivf_index(spark, delta, name, batch_id=1)
-        assert S._centroids_table_key(spark, name) == k1
-        assert k1 in S._ASSIGN_RENDER_CACHE
-        # retrain rewrites the centroids table → the key MUST move
         S.retrain_ivf_index(spark, name, iters=2, n_centroids=4)
-        k2 = S._centroids_table_key(spark, name)
-        assert k2 is not None and k2 != k1
         # post-retrain append uses the new centroids: every appended
-        # row's assignment matches a fresh argmin against the CURRENT
-        # centroid set (stale cache would keep old centroid ids)
+        # row's assignment lies in the CURRENT centroid set
         assert S.append_to_ivf_index(spark, delta, name, batch_id=2)
         cur_cents = {
             r["centroid_id"]
@@ -721,13 +709,77 @@ def test_argmin_render_cache_invalidates_on_centroid_rewrite(spark):
         appended = spark.table(f"{name}_lists").join(
             delta.select("vec_id"), "vec_id", "left_semi"
         )
-        assert {
-            r["centroid_id"] for r in appended.collect()
-        } <= cur_cents
+        got = appended.select("vec_id", "centroid_id").collect()
+        assert got and {r["centroid_id"] for r in got} <= cur_cents
+        # and each is the argmin against the current centroids
+        fresh = {
+            r["vec_id"]: r["centroid_id"]
+            for r in S._assign_via_broadcast(
+                delta.select(
+                    "vec_id", "embedding", S._norm("embedding").alias("nrm")
+                ),
+                spark.table(f"{name}_centroids"),
+            ).collect()
+        }
+        assert all(fresh[r["vec_id"]] == r["centroid_id"] for r in got)
     finally:
         for s in ("_lists", "_centroids", "_batches", "_stats",
                   "_tombstones", "_deferred"):
             spark.sql(f"DROP TABLE IF EXISTS tia_cache{s}")
+
+
+def test_assignment_fails_loudly_on_empty_centroid_set(spark):
+    """An empty centroid frame is an error, never a corpus of NULL
+    centroid ids written into an index."""
+    v = S._vectors(spark, SF).select("vec_id", "embedding", "nrm")
+    cent = v.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+    with pytest.raises(Exception, match="centroid frame is empty"):
+        S._assign_via_broadcast(v, cent).collect()
+
+
+def test_adc_search_fails_loudly_on_incomplete_codebook(spark):
+    """A codebook missing one subspace must fail the encode: entries
+    are selected by their own ``m``, so a gap can never shift every
+    later subspace onto the wrong entries."""
+    v = S.quantized_vectors(spark, SF)
+    cb = S._pq_modulus_codebooks(v, S.PQ_CODEBOOK_MODULUS).filter(
+        F.col("m") != 3
+    )
+    queries = v.filter(F.col("vec_id") % S.QUERY_MODULUS == 0)
+    with pytest.raises(Exception, match="no entries for subspace m=3"):
+        S._pq_adc_search(v, cb, queries).collect()
+
+
+def test_scoped_persist_skips_a_frame_uncached_by_its_table_drop(spark):
+    """A DROP TABLE uncaches every cached frame that reads the table,
+    and such a frame's plan still lists the dropped files.  An append
+    against a rebuilt index must plan afresh, not reuse that frame
+    (it failed with FILE_NOT_EXIST once the assignment read the
+    centroids table)."""
+    from hadoop_logfile_inputformat_spark.operators.tables import (
+        scoped_persist,
+    )
+
+    name, key = "tia_scoped", ("tia_scoped",)
+
+    def rebuild():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.range(10).write.format("parquet").saveAsTable(name)
+
+    try:
+        rebuild()
+        first = scoped_persist(spark.table(name), key)
+        assert first.agg(F.sum("id")).first()[0] == 45
+        rebuild()
+        again = scoped_persist(spark.table(name), key)
+        assert again.agg(F.sum("id")).first()[0] == 45
+    finally:
+        scoped_persist(spark.range(0), key).unpersist()
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_delta_missing_probe_ignores_null_ids(spark):

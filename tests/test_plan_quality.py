@@ -299,14 +299,52 @@ def test_lloyd_training_iteration_has_no_corpus_exchange(spark):
         )
 
 
+def _assert_broadcast_argmin_shape(plan: str, exploded: bool) -> None:
+    """The corpus side of the one broadcast-row argmin kernel
+    (:func:`_assign_via_broadcast`, :func:`_pq_encode_bcast`): the only
+    join is one ``BroadcastNestedLoopJoin BuildRight`` against the
+    centroids'/codebook's single row, its streamed (corpus) child holds
+    no Exchange — only the centroid-/codebook-sized broadcast subtree
+    may shuffle — the argmin evaluates in exactly ONE operator (no
+    inferred filter or join condition re-evaluating it), and an
+    encode's Generate sits ABOVE that projection, so the M-way argmin
+    runs once per vector, not once per exploded element."""
+    lines = plan.splitlines()
+    joins = [i for i, l in enumerate(lines) if "Join" in l]
+    assert len(joins) == 1, plan
+    j = joins[0]
+    assert "BroadcastNestedLoopJoin BuildRight" in lines[j], plan
+    # the join's child markers sit under its name's first column: the
+    # streamed child's subtree keeps a ':' there, the build side
+    # starts at the '+-' marker
+    col = lines[j].index("BroadcastNestedLoopJoin")
+    streamed = []
+    for line in lines[j + 1:]:
+        if line[col:col + 1] != ":":
+            break
+        streamed.append(line)
+    assert streamed, plan
+    assert not any("Exchange" in l for l in streamed), plan
+    argmin = [i for i, l in enumerate(lines) if "array_min" in l]
+    assert len(argmin) == 1, plan
+    assert argmin[0] < j, plan
+    if exploded:
+        # (a modulus codebook's own explode lives in the build side)
+        gen = [i for i, l in enumerate(lines[:j]) if "Generate" in l]
+        assert len(gen) == 1 and gen[0] < argmin[0], plan
+        assert "array_min" not in lines[gen[0]], plan
+
+
 def test_fused_pq_encode_is_a_pure_projection(spark):
-    """_pq_encode_fused (the index builds'/appends' encode path) must
-    compute every vector's M codes with NO exchange and NO join: the
-    codebook rides as a SQL literal, the argmin array gets its own
-    projection BELOW the posexplode (collapsing them would recompute
-    the whole M-argmin per generated element — the Lloyd's-training
-    trap), and the only data movement left in an index build is the
-    bucketed write's own clustering."""
+    """_pq_encode_bcast (every PQ build's, append's and ADC search's
+    encode) computes every vector's M codes in one projection over the
+    corpus against the codebook's one broadcast row: no corpus-side
+    Exchange, one join (the one-row broadcast), the argmin in exactly
+    one operator — an inner posexplode lets Spark infer
+    ``size(_enc) > 0`` and re-inline the whole M-argmin into that
+    filter — and the Generate above it (collapsing them would
+    recompute the M-argmin per generated element — the Lloyd's-training
+    trap)."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
     # plain scan (tables.load adds its own round-robin repartition,
@@ -318,29 +356,22 @@ def test_fused_pq_encode_is_a_pure_projection(spark):
     )
     cb = S._pq_modulus_codebooks(v, 100)
     plan = (
-        S._pq_encode_fused(v, cb)
+        S._pq_encode_bcast(v, cb, carry=("nrm",))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "Generate" in plan, plan
-    # argmin below the Generate: the generator input is the plain
-    # array column, not the inline argmin expression re-evaluated
-    # per element
-    gen = [l for l in plan.splitlines() if "Generate" in l][0]
-    assert "array_min" not in gen, gen
+    _assert_broadcast_argmin_shape(plan, exploded=True)
 
 
 def test_centroid_assignment_is_a_pure_projection(spark):
-    """_assign_to_centroids (builds, appends, the oracled incremental
-    twin) must be a projection over the corpus — centroids ride as a
-    SQL literal, no join, no Exchange (the previous form regrouped the
-    whole corpus, embeddings included, through groupBy(vec_id)) — and
-    the k x dim argmin struct must evaluate ONCE per row (its alias
-    stays its own projection; a collapse would inline it into both the
-    centroid_id and c_sim outputs)."""
+    """_assign_via_broadcast (builds, appends, the inline probe twins)
+    must be a projection over the corpus against the centroids' one
+    broadcast row — no corpus-side Exchange (the join form regrouped
+    the whole corpus, embeddings included, through groupBy(vec_id)) —
+    and the k x dim argmin struct must evaluate ONCE per row (its
+    alias stays its own projection; a collapse would inline it into
+    both the centroid_id and c_sim outputs)."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
     v = (
@@ -357,21 +388,20 @@ def test_centroid_assignment_is_a_pure_projection(spark):
         F.col("embedding").alias("c_emb"),
         F.col("nrm").alias("c_nrm"),
     )
-    plan = (
-        S._assign_to_centroids(v, cent)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert plan.count("array_min") == 1, plan
+    for metric in ("cosine", "l2"):
+        plan = (
+            S._assign_via_broadcast(v, cent, metric=metric)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        _assert_broadcast_argmin_shape(plan, exploded=False)
 
 
 def test_opq_rotation_is_a_pure_pinned_projection(spark):
     """The OPQ rotate (r12) must add NO join and NO exchange to the
     encode chain — the d x d matrix rides as a SQL literal projection
-    — and the rotated frame the builders feed to _pq_encode_fused is
+    — and the rotated frame the builders feed to _pq_encode_bcast is
     PINNED (InMemoryRelation), so the d² matmul evaluates once per
     row instead of re-inlining into every per-entry encode lambda
     (the upstream-HOF landmine, measured 25x re-evaluation when it
@@ -393,16 +423,15 @@ def test_opq_rotation_is_a_pure_pinned_projection(spark):
     try:
         cb = S._pq_modulus_codebooks(pinned, 100)
         enc_plan = (
-            S._pq_encode_fused(pinned, cb)
+            S._pq_encode_bcast(pinned, cb)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         assert "InMemoryTableScan" in enc_plan, enc_plan
-        assert "Exchange" not in enc_plan, enc_plan
-        # the rotation literal must NOT appear inside the encode plan:
-        # it is materialized behind the persist, not re-inlined into
-        # the per-entry lambdas (the scan carries plain columns)
-        assert enc_plan.count("array_min") <= S.PQ_M + 1, enc_plan
+        # the rotation is materialized behind the persist, not
+        # re-inlined into the per-entry lambdas: one argmin operator,
+        # and the corpus side reads the cached rows without a shuffle
+        _assert_broadcast_argmin_shape(enc_plan, exploded=True)
     finally:
         pinned.unpersist(blocking=False)
